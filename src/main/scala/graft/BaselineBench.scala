@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import com.fasterxml.jackson.core.JsonGenerator
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -236,30 +238,8 @@ object BaselineBench {
       out(s"ivf${cells}_batch_nprobe${nprobe}_recall_at_10") =
         recalls.sum / recalls.length
       out(s"ivf${cells}_batch_nprobe${nprobe}_scan_fraction") = scan
-      def ivfBatch(qs: Seq[(Int, Array[Float])]): Unit =
-        Ivf.batchSearch(index, qs, 10, nprobe, "id", "vector").collect()
-      ivfBatch(q100.take(10)) // warm
-      val ms100 = best(runs)(ivfBatch(q100)) / 100.0
-      out(s"ivf${cells}_batch100_nprobe${nprobe}_qps") = 1000.0 / ms100
-      val ms2000 = best(math.max(1, runs - 1))(ivfBatch(q2000)) / 2000.0
-      out(s"ivf${cells}_batch2000_nprobe${nprobe}_ms_per_query") = ms2000
-      out(s"ivf${cells}_batch2000_nprobe${nprobe}_qps") = 1000.0 / ms2000
-
-      // fused mapPartitions kernel: identical results (AnnSpec proves
-      // row-identity), the row-overhead-free throughput shape
-      out(s"fused${cells}_batch_nprobe${nprobe}_recall_at_10") =
-        recalls.sum / recalls.length
-      def fusedBatch(qs: Seq[(Int, Array[Float])]): Unit =
-        Ivf.batchSearchFused(index, qs, 10, nprobe, "id", "vector").collect()
-      fusedBatch(q100.take(10)) // warm
-      val fms100 = best(runs)(fusedBatch(q100)) / 100.0
-      out(s"fused${cells}_batch100_nprobe${nprobe}_qps") = 1000.0 / fms100
-      val fms2000 = best(math.max(1, runs - 1))(fusedBatch(q2000)) / 2000.0
-      out(s"fused${cells}_batch2000_nprobe${nprobe}_ms_per_query") = fms2000
-      out(s"fused${cells}_batch2000_nprobe${nprobe}_qps") = 1000.0 / fms2000
-
-      // packed inverted lists: same semantics (AnnSpec row-identity), zero
-      // per-batch decode — the serving-mode throughput row
+      // packed inverted lists: per-query Ivf.search's rows (AnnSpec
+      // row-identity), zero per-batch decode — the serving-mode throughput row
       val px = packedCache.getOrElseUpdate(cells, {
         val (p, pms) = timeMs(Ivf.pack(index, "id", "vector"))
         out(s"packed${cells}_pack_ms") = pms
@@ -279,7 +259,7 @@ object BaselineBench {
 
     // ---- exact batch over the packed layout ----------------------------
     // nprobe = numCells degenerates to brute force (spec-asserted equal to
-    // batchSearch at full probe) — the fastest EXACT batch mode: one
+    // per-query Ivf.search at full probe) — the fastest EXACT batch mode: one
     // decode-free flat-array pass over the whole collection per batch
     {
       val px = packedCache(256)
@@ -455,45 +435,8 @@ object BaselineBench {
     }
 
     packedCache.values.foreach(_.unpersist())
-    ix256.assigned.unpersist() // keep the BQ section's memory clean
-
-    // ---- batched IVF + residual-binary two-phase (scan-bandwidth path) -
-    // coarse Hamming over residual sign bits (v − cell centroid: the
-    // within-cell geometry IVF has not resolved; global sign bits only
-    // re-encode the cluster center — measured 0.31 recall here), exact
-    // re-rank of k·oversample
-    {
-      import graft.ann.Quantization
-      val ixBq0 = Ivf.build(df, col("vector"), cells, "cosine",
-        maxTrainRows = 20000) // same seed/params → same centroids as ix
-      val withCodes = ixBq0.assigned.withColumn("codes",
-        Quantization.residualBqEncodeLongs(ixBq0.centroids)(
-          col("vector"), col("cell")))
-      val ixBq = ixBq0.copy(assigned = withCodes.persist())
-      ixBq.assigned.count()
-      ix.assigned.unpersist()
-      Seq(2, 4).foreach { nprobe =>
-        val recalls = qr.zip(exactTops).map { case (q, exact) =>
-          val approx = Quantization.batchResidualBqSearchRerank(ixBq,
-            Seq((0, q)), 10, nprobe, oversample = 8,
-            idCol = "id", vecCol = "vector")
-            .select("id").collect().map(_.getLong(0)).toSet
-          exact.intersect(approx).size / 10.0
-        }
-        out(s"rbq_batch_nprobe${nprobe}_recall_at_10") =
-          recalls.sum / recalls.length
-        def bqBatch(qs: Seq[(Int, Array[Float])]): Unit =
-          Quantization.batchResidualBqSearchRerank(ixBq, qs, 10, nprobe,
-            oversample = 8, idCol = "id", vecCol = "vector").collect()
-        bqBatch(q100.take(10)) // warm
-        val ms100 = best(runs)(bqBatch(q100)) / 100.0
-        out(s"rbq_batch100_nprobe${nprobe}_qps") = 1000.0 / ms100
-        val ms2000 = best(math.max(1, runs - 1))(bqBatch(q2000)) / 2000.0
-        out(s"rbq_batch2000_nprobe${nprobe}_ms_per_query") = ms2000
-        out(s"rbq_batch2000_nprobe${nprobe}_qps") = 1000.0 / ms2000
-      }
-      ixBq.assigned.unpersist()
-    }
+    ix256.assigned.unpersist()
+    ix.assigned.unpersist()
 
     // ---- artifact ------------------------------------------------------
     // reference README.md:75-85 at this exact shape
@@ -509,7 +452,7 @@ object BaselineBench {
         // clears the reference's published band (≥ 0.95) — a fast
         // low-recall config is not a comparable number
         val eligible = out.keys.filter(_.matches(
-          "(ivf\\d+|rbq|fused\\d+|packed\\d+|simd\\d+)_batch_nprobe\\d+_recall_at_10"))
+          "(packed\\d+|simd\\d+)_batch_nprobe\\d+_recall_at_10"))
           .filter(out(_) >= 0.95)
           .map(_.replace("_batch_nprobe", "_batch2000_nprobe")
             .replace("_recall_at_10", "_qps"))
@@ -541,17 +484,25 @@ object BaselineBench {
             out("single_search_local_simd_qps"))
         else out("single_search_local_qps")
       }))
-    def f(d: Double): String =
-      if (d >= 100) f"$d%.1f" else f"$d%.4f"
-    val ratios = refRows.map { case (k, ref, got) =>
-      s""""$k": {"reference": $ref, "this_engine": ${f(got)}, "ratio_vs_ref": ${f(got / ref)}}"""
+    val mapper = new ObjectMapper()
+      .enable(JsonGenerator.Feature.WRITE_BIGDECIMAL_AS_PLAIN)
+    // a non-finite figure (a zero-time row) is written as JSON null
+    def f(d: Double): java.math.BigDecimal =
+      if (d.isNaN || d.isInfinite) null
+      else java.math.BigDecimal.valueOf(d).setScale(if (d >= 100) 1 else 4,
+        java.math.RoundingMode.HALF_UP)
+    val doc = mapper.createObjectNode().put("shape", s"${total}x$dims")
+    doc.set[JsonNode]("cpus",
+      mapper.valueToTree[JsonNode](cpus.toIntOption.map(Int.box).getOrElse(cpus)))
+    doc.put("runs", runs)
+    val comparison = doc.putObject("comparison")
+    refRows.foreach { case (k, ref, got) =>
+      comparison.putObject(k).put("reference", ref)
+        .put("this_engine", f(got)).put("ratio_vs_ref", f(got / ref))
     }
-    val detail = out.map { case (k, v) => s""""$k": ${f(v)}""" }
-    val json =
-      s"""{"shape": "${total}x$dims", "cpus": $cpus, "runs": $runs,
-         | "comparison": {${ratios.mkString(", ")}},
-         | "detail": {${detail.mkString(", ")}}}""".stripMargin
-      .replace("\n", "")
+    val detail = doc.putObject("detail")
+    out.foreach { case (k, v) => detail.put(k, f(v)) }
+    val json = mapper.writeValueAsString(doc)
     Files.createDirectories(Paths.get(outPath).getParent)
     Files.writeString(Paths.get(outPath), json + "\n")
     println(json)

@@ -1,4 +1,9 @@
 package graft
+import java.nio.file.Files
+
+import com.fasterxml.jackson.core.JsonGenerator
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark surface: one JSON line with per-query wall times.
@@ -96,24 +101,38 @@ object Bench {
       val s = xs.sorted
       if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
     }
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
+    val json = new ObjectMapper()
+      .enable(JsonGenerator.Feature.WRITE_BIGDECIMAL_AS_PLAIN)
+    def num(v: Double, dec: Int): java.math.BigDecimal =
+      java.math.BigDecimal.valueOf(v)
+        .setScale(dec, java.math.RoundingMode.HALF_UP)
+    // a query that throws is a failure, never a timing: its remaining
+    // runs are skipped and it is listed by name under "failed"
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    def fail(name: String, e: Throwable): Unit = {
+      System.err.println(s"[bench] $name failed: $e")
+      failed += name
+    }
+    val benched = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.isEmpty || only(name) }
-      .map { case (name, fn) =>
-        val times = (1 to runs).map { _ =>
-          val t0 = System.nanoTime()
-          // collect, not count: count() lets Catalyst prune the projections a
-          // query exists to compute (result sets are bounded, so collect is safe)
-          try { fn(spark, sfDir).collect().length }
-          catch { case _: Throwable => -1 }
-          (System.nanoTime() - t0) / 1e9
-        }
+    val results = benched.flatMap { case (name, fn) =>
+      val times = Iterator.fill(runs) {
+        val t0 = System.nanoTime()
+        // collect, not count: count() lets Catalyst prune the projections a
+        // query exists to compute (result sets are bounded, so collect is safe)
+        try { fn(spark, sfDir).collect(); Some((System.nanoTime() - t0) / 1e9) }
+        catch { case e: Throwable => fail(name, e); None }
+      }.takeWhile(_.isDefined).flatten.toSeq
+      // per-query load sample: catches contamination arriving mid-run
+      val (l, r) = hostLoad()
+      loadMax = math.max(loadMax, l); runnableMax = math.max(runnableMax, r)
+      if (times.size < runs) None
+      else {
         val med = median(times)
         val spread = if (med > 0) (times.max - times.min) / med else 0.0
-        // per-query load sample: catches contamination arriving mid-run
-        val (l, r) = hostLoad()
-        loadMax = math.max(loadMax, l); runnableMax = math.max(runnableMax, r)
-        (name, med, times.min, spread)
+        Some((name, med, times.min, spread))
       }
+    }
     // The driver keeps only the LAST ~2000 characters of stdout and parses
     // the JSON line from that window. Full-precision maps for 80+ queries
     // overflow it (rounds 1-3 all recorded parsed:null), so the detail
@@ -121,12 +140,12 @@ object Bench {
     // `#detail` lines and the FINAL line is a compact (<1.8 KB) JSON with
     // 2-decimal medians that fits the window even with sbt's trailing
     // "[success]" line.
-    def short(v: Double, dec: Int): String = {
-      val s = String.format(s"%.${dec}f", Double.box(v))
-      if (s.contains('.')) s.reverse.dropWhile(_ == '0').stripPrefix(".").reverse else s
-    }
+    def stats(o: ObjectNode, med: Double, mn: Double, sp: Double): ObjectNode =
+      o.put("median", num(med, 4)).put("min", num(mn, 4))
+        .put("spread", num(sp, 3))
     results.foreach { case (k, med, mn, sp) =>
-      println(f"""#detail {"q":"$k","median":$med%.4f,"min":$mn%.4f,"spread":$sp%.3f}""")
+      println("#detail " +
+        json.writeValueAsString(stats(json.createObjectNode().put("q", k), med, mn, sp)))
     }
     val total = results.map(_._2).sum
     // Full-precision details also land in a file (the driver's stdout
@@ -140,61 +159,50 @@ object Bench {
     // are the only drift signal, so every bench artifact records them as
     // a `recall` block (diffable round-over-round instead of buried in
     // logs). One extra execution each; their expensive state is already
-    // warm in IndexCache from the timed runs.
-    // per-query try: one failing recall query must not drop the other
-    // measurements from the artifact
-    val recallBlock: Option[String] =
-      if (only.nonEmpty) None
-      else {
-        val per = Seq("ivf_recall", "ivf_recall_clustered", "quantized_recall")
-          .flatMap { name =>
-            SparkEntry.queries.get(name).flatMap { fn =>
-              try {
-                // JSON-safe emission: escape key strings; map null/NaN/
-                // Infinity values to JSON null (NaN is not legal JSON and
-                // would break bench_diff.py's parse of the whole artifact)
-                val kv = fn(spark, sfDir).collect().map { r =>
-                  // full JSON string escape: a control char (\n, \t, …)
-                  // in a group-by key would otherwise emit invalid JSON
-                  // and break bench_diff.py's parse of the whole artifact
-                  val key = String.valueOf(r.get(0)).flatMap {
-                    case '"'  => "\\\""
-                    case '\\' => "\\\\"
-                    case '\n' => "\\n"
-                    case '\r' => "\\r"
-                    case '\t' => "\\t"
-                    case c if c < ' ' => f"\\u${c.toInt}%04x"
-                    case c => c.toString
-                  }
-                  val v = r.get(1) match {
-                    case null => "null"
-                    case d: java.lang.Double
-                      if d.isNaN || d.isInfinite => "null"
-                    case f: java.lang.Float
-                      if f.isNaN || f.isInfinite => "null"
-                    case n: java.lang.Number => n.toString
-                    case _ => "null" // non-numeric second column
-                  }
-                  s""""$key":$v"""
-                }.mkString("{", ",", "}")
-                Some(s""""$name":$kv""")
-              } catch { case _: Throwable => None }
-            }
+    // warm in IndexCache from the timed runs. A failing recall query is
+    // listed under "failed" and the others are still recorded; NaN,
+    // Infinity and non-numeric values become JSON null (NaN is not legal
+    // JSON and would break bench_diff.py's parse of the whole artifact).
+    val recall = json.createObjectNode()
+    if (only.isEmpty)
+      Seq("ivf_recall", "ivf_recall_clustered", "quantized_recall")
+        .foreach { name =>
+          SparkEntry.queries.get(name).foreach { fn =>
+            try {
+              val kv = json.createObjectNode()
+              fn(spark, sfDir).collect().foreach { r =>
+                val key = String.valueOf(r.get(0))
+                r.get(1) match {
+                  case n: java.lang.Number
+                    if !n.doubleValue.isNaN && !n.doubleValue.isInfinite =>
+                    kv.set[JsonNode](key, json.valueToTree[JsonNode](n))
+                  case _ => kv.putNull(key)
+                }
+              }
+              recall.set[JsonNode](name, kv)
+            } catch { case e: Throwable => fail(name, e) }
           }
-        if (per.isEmpty) None else Some(per.mkString("{", ",", "}"))
-      }
+        }
     try {
       val f = new java.io.File(detailOut)
       Option(f.getParentFile).foreach(_.mkdirs())
-      val w = new java.io.PrintWriter(f, "UTF-8")
-      try {
-        val qs = results.map { case (k, med, mn, sp) =>
-          f""""$k":{"median":$med%.4f,"min":$mn%.4f,"spread":$sp%.3f}"""
-        }.mkString(",")
-        val recall = recallBlock.map(r => s""","recall":$r""").getOrElse("")
-        val host = f""""host":{"cpus_host":${Runtime.getRuntime.availableProcessors},"load_start":$loadStart%.2f,"load_max":$loadMax%.2f,"runnable_start":$runnableStart,"runnable_max":$runnableMax}"""
-        w.println(f"""{"total":$total%.2f,"sf":"${new java.io.File(sfDir).getName}","cpus":$cpus,"runs":$runs,$host$recall%s,"queries":{$qs}}""")
-      } finally w.close()
+      val doc = json.createObjectNode()
+        .put("total", num(total, 2))
+        .put("sf", new java.io.File(sfDir).getName)
+        .put("runs", runs)
+      doc.set[JsonNode]("cpus",
+        json.valueToTree[JsonNode](cpus.toIntOption.map(Int.box).getOrElse(cpus)))
+      doc.putObject("host")
+        .put("cpus_host", Runtime.getRuntime.availableProcessors)
+        .put("load_start", num(loadStart, 2)).put("load_max", num(loadMax, 2))
+        .put("runnable_start", runnableStart).put("runnable_max", runnableMax)
+      if (!recall.isEmpty) doc.set[JsonNode]("recall", recall)
+      val fl = doc.putArray("failed"); failed.foreach(fl.add)
+      val qs = doc.putObject("queries")
+      results.foreach { case (k, med, mn, sp) =>
+        stats(qs.putObject(k), med, mn, sp)
+      }
+      Files.writeString(f.toPath, json.writeValueAsString(doc) + "\n")
     } catch { case _: Throwable => () } // bench output must never fail the run
     val sfName = new java.io.File(sfDir).getName
     // The final line must fit the driver's ~2000-char stdout tail window.
@@ -227,12 +235,25 @@ object Bench {
     val shown =
       if (only.nonEmpty) results
       else results.filter { case (k, _, _, _) => headline.contains(k) }
-    def line(dec: Int): String = {
-      val qs = shown.map { case (k, v, _, _) => "\"" + k + "\":" + short(v, dec) }
-        .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${short(total, 2)},"unit":"sec","n_queries":${results.size},"load_start":${short(loadStart, 1)},"load_max":${short(loadMax, 1)},"queries":$qs,"sf":"$sfName"}"""
+    // failed names ride the final line too, as many as fit the window
+    // (the artifact lists them all)
+    def line(dec: Int, failedShown: Seq[String]): String = {
+      val o = json.createObjectNode()
+        .put("metric", "total").put("value", num(total, 2).stripTrailingZeros)
+        .put("unit", "sec").put("n_queries", benched.size)
+        .put("load_start", num(loadStart, 1).stripTrailingZeros)
+        .put("load_max", num(loadMax, 1).stripTrailingZeros)
+      val qs = o.putObject("queries")
+      shown.foreach { case (k, v, _, _) =>
+        qs.put(k, num(v, dec).stripTrailingZeros)
+      }
+      o.put("sf", sfName)
+      val fl = o.putArray("failed"); failedShown.foreach(fl.add)
+      json.writeValueAsString(o)
     }
-    println(Seq(line(2), line(1)).find(_.length <= 1900).getOrElse(line(1)))
+    val fs = failed.toSeq
+    val lines = Seq(line(2, fs)) ++ (fs.size to 0 by -1).map(n => line(1, fs.take(n)))
+    println(lines.find(_.length <= 1900).getOrElse(lines.last))
     spark.stop()
   }
 }

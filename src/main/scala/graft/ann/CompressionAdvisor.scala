@@ -80,8 +80,8 @@ object CompressionAdvisor {
           "validate recall on held-out queries")
         case _ => Seq(
           s"$collection: train sign thresholds (per-dimension means)",
-          s"add a bits column: bqEncodeLongs over $totalVectors vectors",
-          "serve via Hamming coarse rank + exact re-rank",
+          s"add a bits column: bqEncode over $totalVectors vectors",
+          "serve via two-phase bqSearchRerank (Hamming coarse rank, exact re-rank)",
           "validate recall on held-out queries")
       }
     }

@@ -27,8 +27,8 @@ object DataProfiler {
     DataProfile(0, 0L, 0.0, 0.0, 0.0, 0.0, appearsNormalized = false, 0, 0.0)
 
   /** Per-row (dim, magnitude, nearZero<0.001 count) as `aggregate`
-    * expressions, NOT a UDF. Measured on this engine (UdfVsHofBench,
-    * bench_history/udf_vs_hof_r16.json): the compiled-UDF formulation is
+    * expressions, NOT a UDF. Measured on this engine
+    * (bench_history/udf_vs_hof_r16.json): the compiled-UDF formulation is
     * 1.6× SLOWER at 64-dim and ~9× slower at 384-dim than these
     * higher-order aggregates — a `Seq[Float]` UDF boxes every element on
     * deserialization, and that allocation cost grows faster with dim

@@ -98,16 +98,8 @@ object Ivf {
       .collect()
       .map(_.getSeq[Float](0).toArray)
     val centroids = localKMeans(train, numCells, maxIter, seed)
-    val assigned0 = df.withColumn("cell", cellOf(vecCol, centroids, metric))
-    // cosine index state: the per-row vector norm (what HNSW keeps beside
-    // its graph) — lets [[batchSearch]] score each candidate pair with a
-    // dot product alone (1 fused multiply-add per element instead of 3),
-    // bit-identical to the fused cosine kernel
-    val assigned = if (metric == "cosine")
-      assigned0.withColumn("__vnorm",
-        sqrt(-Distances.distance("dot", vecCol, vecCol)))
-    else assigned0
-    Index(centroids, assigned, metric)
+    Index(centroids, df.withColumn("cell", cellOf(vecCol, centroids, metric)),
+      metric)
   }
 
   /** Seeded k-means++ init + Lloyd iterations, squared-euclidean (the same
@@ -243,7 +235,7 @@ object Ivf {
       .withColumn("distance", dist)
       .orderBy(col("distance").asc, col(idCol).asc)
       .limit(k)
-      .drop("cell", "__vnorm")
+      .drop("cell")
   }
 
   /** Persist an index as collection state (the reference serializes its
@@ -279,119 +271,12 @@ object Ivf {
       spark.read.parquet(s"$path/cells"), rows(0).getString(2))
   }
 
-  /** Batched ANN top-k: ALL queries answered by ONE job. Each query's
-    * nprobe cells are computed driver-side over the tiny centroid set
-    * (queries are by definition the small, collectable side — they are
-    * broadcast either way); the exploded (query, cell) pairs broadcast-
-    * equi-join the assigned table on `cell`, so the scan touches each
-    * cell once per query probing it — |rows scored| = Σ probed-cell
-    * sizes, the IVF scan fraction — and the bounded top-k aggregate
-    * ([[graft.functions.TopKAgg]]) keeps the exchange at
-    * |partitions|×|queries|×k pre-reduced rows.
-    *
-    * This is the throughput shape: [[search]] pays one scheduler round
-    * trip PER query (~0.2 s on an idle local session), which dominates
-    * the pruned scan at any realistic nprobe; here the round trip
-    * amortizes across the whole batch. `idCol` must be numeric (the
-    * bounded aggregate buffers longs).
-    */
-  def batchSearch(ix: Index, queries: Seq[(Int, Array[Float])], k: Int,
-                  nprobe: Int, idCol: String = "id",
-                  vecCol: String = "vector",
-                  roundTo: Option[Int] = None): DataFrame = {
-    import graft.functions.TopKAgg
-    val spark = ix.assigned.sparkSession
-    import spark.implicits._
-    def qnorm(qv: Array[Float]): Double = {
-      var s = 0.0; var i = 0
-      while (i < qv.length) { s += qv(i).toDouble * qv(i); i += 1 }
-      math.sqrt(s)
-    }
-    val pairs = queries.flatMap { case (qid, qv) =>
-      probeCells(ix, qv, nprobe).map(c => (qid, c, qv.toSeq, qnorm(qv)))
-    }
-    val qdf = pairs.toDF("query_id", "cell", "query_vector", "__qnorm")
-    // cosine fast path over the index's stored row norms: dist =
-    // 1 + dot_dist/(|v||q|) — negation and division are exact, so this is
-    // bit-identical to the fused kernel at a third of the arithmetic
-    val raw =
-      if (ix.metric == "cosine" && ix.assigned.columns.contains("__vnorm"))
-        when(col("__vnorm") === 0.0 || col("__qnorm") === 0.0, lit(1.0))
-          .otherwise(lit(1.0) +
-            Distances.distance("dot", col(vecCol), col("query_vector")) /
-              (col("__vnorm") * col("__qnorm")))
-      else Distances.distance(ix.metric, col(vecCol), col("query_vector"))
-    val dist = roundTo.fold(raw)(n => round(raw, n))
-    ix.assigned
-      .join(broadcast(qdf), "cell")
-      .select(col("query_id"), dist.as("__d"),
-        col(idCol).cast("long").as("__id"))
-      .groupBy(col("query_id"))
-      .agg(TopKAgg.topKF(k)(col("__d"), col("__id")).as("__top"))
-      .select(col("query_id"), explode(col("__top")).as("__t"))
-      .select(col("query_id"), col("__t._2").as(idCol),
-        col("__t._1").as("distance"))
-  }
-
-  /** Driver-side mirror of the [[graft.functions.DistanceKernels]] float
-    * kernels for the fused batch path: same double accumulation in the
-    * same index order, so scores are bit-identical to the codegen'd
-    * expression. `vn2`/`qn2` are precomputed sums of squares (used by
-    * cosine only).
-    */
-  private[graft] def scoreKernel(
-      metric: String): (Array[Float], Double, Array[Float], Double) => Double = {
-    def dot(v: Array[Float], q: Array[Float]): Double = {
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i).toDouble * q(i).toDouble; i += 1 }
-      s
-    }
-    def sq(v: Array[Float], q: Array[Float]): Double = {
-      var s = 0.0; var i = 0
-      while (i < v.length) {
-        val d = v(i).toDouble - q(i).toDouble; s += d * d; i += 1
-      }
-      s
-    }
-    metric match {
-      case "cosine" => (v, vn2, q, qn2) =>
-        if (vn2 == 0.0 || qn2 == 0.0) 1.0
-        else 1.0 - dot(v, q) / (math.sqrt(vn2) * math.sqrt(qn2))
-      case "cosine_normalized" => (v, _, q, _) => 1.0 - dot(v, q)
-      case "dot"          => (v, _, q, _) => -dot(v, q)
-      case "euclidean"    => (v, _, q, _) => math.sqrt(sq(v, q))
-      case "sq_euclidean" => (v, _, q, _) => sq(v, q)
-      case "manhattan" => (v, _, q, _) => {
-        var s = 0.0; var i = 0
-        while (i < v.length) { s += math.abs(v(i).toDouble - q(i).toDouble); i += 1 }
-        s
-      }
-      case "chebyshev" => (v, _, q, _) => {
-        var s = 0.0; var i = 0
-        while (i < v.length) {
-          val d = math.abs(v(i).toDouble - q(i).toDouble)
-          if (d > s) s = d; i += 1
-        }
-        s
-      }
-      case "hamming" => (v, _, q, _) => {
-        var s = 0.0; var i = 0
-        while (i < v.length) { if (v(i) != q(i)) s += 1.0; i += 1 }
-        s
-      }
-      case other => throw new IllegalArgumentException(s"unknown metric $other")
-    }
-  }
-
   private[graft] def norm2(v: Array[Float]): Double = {
     var s = 0.0; var i = 0
     while (i < v.length) { s += v(i).toDouble * v(i).toDouble; i += 1 }
     s
   }
 
-  /** k-bounded (score, id)-sorted buffer — the per-partition mirror of
-    * [[graft.functions.TopKAgg]]'s aggregation buffer.
-    */
   /** Per-cell prober set in struct-of-arrays form: the scoring kernels
     * index these primitive arrays directly instead of destructuring a
     * Tuple3 per (row × query) iteration.
@@ -416,6 +301,9 @@ object Ivf {
     java.math.BigDecimal.valueOf(d)
       .setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue()
 
+  /** k-bounded (score, id)-sorted buffer — the per-partition mirror of
+    * [[graft.functions.TopKAgg]]'s aggregation buffer.
+    */
   private[graft] final class TopBuf(k: Int) {
     val scores = new Array[Double](k); val ids = new Array[Long](k)
     var n = 0
@@ -435,79 +323,6 @@ object Ivf {
       scores(lo) = s; ids(lo) = id
       if (n < k) n += 1
     }
-  }
-
-  /** Fused batched ANN: [[batchSearch]]'s semantics — same probe algebra,
-    * same double-accumulated kernels, same (distance, id) tie order — with
-    * the scoring loop run as one mapPartitions kernel over primitive float
-    * arrays. The join form materializes |pairs| = Σ probed-cell-sizes rows,
-    * each dragging a dims-float vector copy through the exchange and
-    * aggregate machinery; here every partition keeps a k-bounded [[TopBuf]]
-    * per query and emits only |partitions|×|queries|×k pre-reduced rows
-    * into the final exact top-k aggregate. Same FLOPs, an order of
-    * magnitude less row overhead — the batch-throughput serving mode.
-    * Probe-cell selection runs on a parallel stream over the tiny centroid
-    * table (2000 queries × 256 centroids is ~200 MFLOP — a driver loop at
-    * that size is itself a measurable serial stage).
-    */
-  def batchSearchFused(ix: Index, queries: Seq[(Int, Array[Float])], k: Int,
-                       nprobe: Int, idCol: String = "id",
-                       vecCol: String = "vector",
-                       roundTo: Option[Int] = None): DataFrame = {
-    import graft.functions.TopKAgg
-    val spark = ix.assigned.sparkSession
-    import spark.implicits._
-    val qarr = queries.toArray
-    val cellsPer = new Array[Seq[Int]](qarr.length)
-    java.util.stream.IntStream.range(0, qarr.length).parallel()
-      .forEach(i => cellsPer(i) = probeCells(ix, qarr(i)._2, nprobe))
-    val byCell: Map[Int, CellProbers] =
-      qarr.indices.flatMap { i =>
-        val (qid, qv) = qarr(i); val n2 = norm2(qv)
-        cellsPer(i).map(c => (c, (qid, qv, n2)))
-      }.groupBy(_._1).map { case (c, xs) => c -> splitProbers(xs.map(_._2)) }
-    val probed = byCell.keys.toSeq
-    val bc = spark.sparkContext.broadcast(byCell)
-    val metric = ix.metric
-    val kk = k
-    val rndScale = roundTo.getOrElse(-1)
-    val partial = ix.assigned
-      .filter(col("cell").isin(probed: _*))
-      .select(col(idCol).cast("long"), col("cell").cast("int"),
-        col(vecCol).cast("array<float>"))
-      .as[(Long, Int, Array[Float])]
-      .mapPartitions { it =>
-        val score = scoreKernel(metric)
-        val needsNorm = metric == "cosine"
-        val bufs = new java.util.HashMap[Int, TopBuf]()
-        it.foreach { case (id, cell, v) =>
-          val probers = bc.value.getOrElse(cell, null)
-          if (probers != null) {
-            val vn2 = if (needsNorm) norm2(v) else 0.0
-            var j = 0
-            while (j < probers.length) {
-              var d = score(v, vn2, probers.qvs(j), probers.qn2s(j))
-              if (rndScale >= 0) d = roundHalfUp(d, rndScale)
-              val qid = probers.qids(j)
-              var b = bufs.get(qid)
-              if (b == null) { b = new TopBuf(kk); bufs.put(qid, b) }
-              b.insert(d, id)
-              j += 1
-            }
-          }
-        }
-        import scala.jdk.CollectionConverters._
-        bufs.entrySet().iterator().asScala.flatMap { e =>
-          val b = e.getValue
-          (0 until b.n).iterator.map(i => (e.getKey.intValue(), b.scores(i), b.ids(i)))
-        }
-      }
-    partial.toDF("query_id", "__d", "__id")
-      .groupBy(col("query_id"))
-      .agg(TopKAgg.topKF(kk)(col("__d"), col("__id")).as("__top"))
-      .select(col("query_id"), explode(col("__top")).as("__t"))
-      .select(col("query_id"), col("__t._2").as(idCol),
-        col("__t._1").as("distance"))
   }
 
   /** One partition-resident inverted list: a cell's ids and row-major flat
@@ -649,12 +464,11 @@ object Ivf {
     PackedIndex(px.centroids, px.metric, px.dims, merged, Set.empty)
   }
 
-  /** Decode once, serve many: [[batchSearchFused]] still pays a full
+  /** Decode once, serve many: a scan over the assigned table pays a full
     * columnar-cache decode (InternalRow → Array[Float] allocation) of every
     * probed row on EVERY batch — at 1M×384 with a large batch (all cells
-    * probed by someone) that decode dominates the scan arithmetic itself,
-    * which is why halving nprobe barely moves the fused QPS. Packing
-    * converts the assigned table ONCE into per-cell primitive-array blocks
+    * probed by someone) that decode dominates the scan arithmetic itself.
+    * Packing converts the assigned table ONCE into per-cell primitive-array blocks
     * held deserialized (the in-memory posting-list layout of any native ANN
     * engine), so every subsequent batch runs the kernel over JVM-native
     * flat floats at array-scan speed. Stays an RDD: blocks live partitioned
@@ -767,9 +581,11 @@ object Ivf {
       rows(0).getString(2), rows(0).getInt(3), blocks)
   }
 
-  /** [[scoreKernel]] over a row-major flat array — identical arithmetic in
-    * identical index order, so scores are bit-identical to [[batchSearch]]
-    * and [[batchSearchFused]] (AnnSpec asserts row identity).
+  /** Mirror of the [[graft.functions.DistanceKernels]] float kernels over
+    * a row-major flat array: same double accumulation in the same index
+    * order, so scores are bit-identical to [[search]]'s codegen'd distance
+    * expression (AnnSpec asserts row identity for cosine, euclidean, dot
+    * and manhattan).
     */
   private[graft] def flatScoreKernel(metric: String)
       : (Array[Float], Int, Int, Array[Float], Double, Double) => Double =
@@ -829,7 +645,7 @@ object Ivf {
     }
 
   /** Kernel selection for the serving paths: the scalar f64 kernel is
-    * the default (bit-identical to the join/fused paths — the oracle
+    * the default (bit-identical to [[search]] — the oracle
     * contract); `simd = true` swaps in the f32 [[VectorSimd]] kernel
     * when the vector module resolves in the CURRENT JVM, else falls
     * back to scalar. Called inside task closures so each executor JVM
@@ -841,9 +657,9 @@ object Ivf {
       Simd.flatKernel(metric).getOrElse(flatScoreKernel(metric))
     else flatScoreKernel(metric)
 
-  /** Batched ANN over a [[PackedIndex]]: [[batchSearchFused]]'s exact
-    * semantics (same probe algebra, kernels, tie order) with zero per-batch
-    * decode — the loop reads flat primitive floats straight from the block
+  /** Batched ANN over a [[PackedIndex]]: per-query [[search]]'s exact
+    * semantics (same probe algebra, kernels, (distance, id) tie order) for
+    * a whole batch in one job, with zero per-batch decode — the loop reads flat primitive floats straight from the block
     * cache. Row-outer / prober-inner keeps each 1.5 KB vector L1-resident
     * across all its cell's probers, so DRAM traffic is one pass over the
     * probed cells regardless of batch size.

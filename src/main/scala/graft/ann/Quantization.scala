@@ -323,162 +323,6 @@ object Quantization {
     d(aCol, bCol)
   }
 
-  /** Array[Float] → sign bits packed LSB-first into ⌈dims/64⌉ LONGS — the
-    * batch-path encoding: Hamming over long words is a native unrolled
-    * `bit_count(xor)` expression ([[bqHammingLongs]]), fully inside
-    * whole-stage codegen, where the byte form pays a Scala UDF per pair.
-    */
-  def bqEncodeLongs(bq: Bq)(vecCol: Column): Column = {
-    val enc = udf((v: Seq[Float]) => {
-      val out = new Array[Long]((v.length + 63) / 64)
-      var i = 0
-      while (i < v.length) {
-        if (v(i) > bq.thresholds(i)) out(i >> 6) |= 1L << (i & 63)
-        i += 1
-      }
-      out.toSeq
-    })
-    enc(vecCol.cast("array<float>"))
-  }
-
-  /** Unrolled Hamming distance over [[bqEncodeLongs]] codes: ~6 native
-    * ops per 64 dims instead of 64 fused multiply-adds — the coarse-pass
-    * kernel of [[batchBqSearchRerank]].
-    */
-  def bqHammingLongs(a: Column, b: Column, numWords: Int): Column =
-    (0 until numWords).map(i =>
-      bit_count(element_at(a, i + 1).bitwiseXOR(element_at(b, i + 1)))
-        .cast("int"))
-      .reduce(_ + _)
-
-  /** Batched IVF + binary two-phase search, ONE job pipeline for every
-    * query: coarse Hamming pre-rank inside each query's probed cells
-    * (bounded top-k·oversample aggregate), then exact re-rank of the
-    * |queries|×k·oversample winner set — tiny — against the full vectors.
-    * The scan reads packed bits at 1/32 the bytes and ~1/20 the arithmetic
-    * of the f32 dot, which is what the 100 TB scan-bandwidth budget buys;
-    * recall is bounded by the IVF probe ceiling times the BQ pre-rank
-    * quality (measure per corpus — `quantized_recall` gates the planted
-    * floor). `ix.assigned` must carry a [[bqEncodeLongs]] codes column.
-    * On strongly clustered corpora prefer [[batchResidualBqSearchRerank]].
-    */
-  def batchBqSearchRerank(ix: Ivf.Index, bq: Bq,
-                          queries: Seq[(Int, Array[Float])], k: Int,
-                          nprobe: Int, oversample: Int = 8,
-                          idCol: String = "id", vecCol: String = "vector",
-                          codesCol: String = "codes",
-                          roundTo: Option[Int] = None): DataFrame = {
-    def qCodes(qv: Array[Float]): Seq[Long] = {
-      val out = new Array[Long]((qv.length + 63) / 64)
-      var i = 0
-      while (i < qv.length) {
-        if (qv(i) > bq.thresholds(i)) out(i >> 6) |= 1L << (i & 63)
-        i += 1
-      }
-      out.toSeq
-    }
-    val pairs = queries.flatMap { case (qid, qv) =>
-      Ivf.probeCells(ix, qv, nprobe).map(c => (qid, c, qCodes(qv)))
-    }
-    batchCoarseRerank(ix, pairs, queries, k, oversample,
-      (bq.dims + 63) / 64, idCol, vecCol, codesCol, roundTo)
-  }
-
-  /** Residual-bit variant of [[batchBqSearchRerank]] (the IVF-PQ insight:
-    * quantize the residual, not the vector). Bits are the sign of
-    * `v − centroid(cell(v))`, so Hamming ranks the WITHIN-cell geometry —
-    * the part IVF has not already resolved; global sign bits mostly
-    * re-encode the cluster center on clustered corpora. When the
-    * within-cell ranking itself rides on sub-bit noise neither form can
-    * rank (measured r6: 0.31 for both on the 1M clustered shape) — the
-    * two-phase SQ8 path covers that regime. The
-    * query is re-encoded against every probed cell's centroid (each
-    * (query, cell) pair carries its own codes). Rows must be encoded with
-    * [[residualBqEncodeLongs]] over the same index's centroids.
-    */
-  def batchResidualBqSearchRerank(ix: Ivf.Index,
-                                  queries: Seq[(Int, Array[Float])], k: Int,
-                                  nprobe: Int, oversample: Int = 8,
-                                  idCol: String = "id",
-                                  vecCol: String = "vector",
-                                  codesCol: String = "codes",
-                                  roundTo: Option[Int] = None): DataFrame = {
-    val dims = ix.centroids(0).length
-    def qCodes(qv: Array[Float], cell: Int): Seq[Long] = {
-      val c = ix.centroids(cell)
-      val out = new Array[Long]((qv.length + 63) / 64)
-      var i = 0
-      while (i < qv.length) {
-        if (qv(i) - c(i) > 0f) out(i >> 6) |= 1L << (i & 63)
-        i += 1
-      }
-      out.toSeq
-    }
-    val pairs = queries.flatMap { case (qid, qv) =>
-      Ivf.probeCells(ix, qv, nprobe).map(c => (qid, c, qCodes(qv, c)))
-    }
-    batchCoarseRerank(ix, pairs, queries, k, oversample,
-      (dims + 63) / 64, idCol, vecCol, codesCol, roundTo)
-  }
-
-  /** Row codes for [[batchResidualBqSearchRerank]]: sign bits of the
-    * residual against the row's own cell centroid.
-    */
-  def residualBqEncodeLongs(centroids: Array[Array[Float]])
-                           (vecCol: Column, cellCol: Column): Column = {
-    val cents = centroids
-    val enc = udf((v: Seq[Float], cell: Int) => {
-      val c = cents(cell)
-      val out = new Array[Long]((v.length + 63) / 64)
-      var i = 0
-      while (i < v.length) {
-        if (v(i) - c(i) > 0f) out(i >> 6) |= 1L << (i & 63)
-        i += 1
-      }
-      out.toSeq
-    })
-    enc(vecCol.cast("array<float>"), cellCol.cast("int"))
-  }
-
-  /** Shared two-phase core: (query, cell, codes) pairs → coarse Hamming
-    * top-k·oversample per query → exact re-rank of the winner set.
-    */
-  private def batchCoarseRerank(ix: Ivf.Index,
-                                pairs: Seq[(Int, Int, Seq[Long])],
-                                queries: Seq[(Int, Array[Float])], k: Int,
-                                oversample: Int, numWords: Int,
-                                idCol: String, vecCol: String,
-                                codesCol: String,
-                                roundTo: Option[Int]): DataFrame = {
-    import graft.functions.TopKAgg
-    val spark = ix.assigned.sparkSession
-    import spark.implicits._
-    val qdf = pairs.toDF("query_id", "cell", "__qcodes")
-    val hd = bqHammingLongs(col(codesCol), col("__qcodes"), numWords)
-    val coarse = ix.assigned
-      .join(broadcast(qdf), "cell")
-      .select(col("query_id"), hd.cast("double").as("__d"),
-        col(idCol).cast("long").as("__id"))
-      .groupBy(col("query_id"))
-      .agg(TopKAgg.topKF(k * oversample)(col("__d"), col("__id")).as("__top"))
-      .select(col("query_id"), explode(col("__top")).as("__t"))
-      .select(col("query_id"), col("__t._2").as("__id"))
-    val qvecs = queries.map { case (qid, qv) => (qid, qv.toSeq) }
-      .toDF("query_id", "query_vector")
-    val raw = Distances.distance(ix.metric, col(vecCol), col("query_vector"))
-    val dist = roundTo.fold(raw)(n => round(raw, n))
-    ix.assigned
-      .select(col(idCol).cast("long").as("__id"), col(vecCol))
-      .join(broadcast(coarse), "__id")
-      .join(broadcast(qvecs), "query_id")
-      .select(col("query_id"), dist.as("__d"), col("__id"))
-      .groupBy(col("query_id"))
-      .agg(TopKAgg.topKF(k)(col("__d"), col("__id")).as("__top"))
-      .select(col("query_id"), explode(col("__top")).as("__t"))
-      .select(col("query_id"), col("__t._2").as(idCol),
-        col("__t._1").as("distance"))
-  }
-
   /** Two-phase binary search: Hamming pre-rank over packed bits (32× less
     * IO than f32), exact re-rank of k×oversample candidates.
     */

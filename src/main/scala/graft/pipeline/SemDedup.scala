@@ -62,6 +62,5 @@ object SemDedup {
     assigned.join(resolved, Seq("id"), "left")
       .withColumn("canonical", coalesce(col("canonical"), col("id")))
       .withColumn("keep", coalesce(col("keep"), lit(1L)))
-      .drop("__vnorm") // index-internal state, not part of the contract
   }
 }

@@ -55,9 +55,12 @@ class RestApi(spark: SparkSession) {
 
   /** Mutable collection state, reference Collection ≙ one DataFrame:
     * (id STRING, vector ARRAY<FLOAT>, metadata STRING json, ttl LONG).
+    * `maxPartitions` is max(partitions at creation, defaultParallelism):
+    * writes coalesce back to it, so the partition count (and every later
+    * scan's task count) stays bounded however many writes run.
     */
   final case class Coll(name: String, dims: Int, metric: String,
-                        @volatile var df: DataFrame,
+                        @volatile var df: DataFrame, maxPartitions: Int,
                         @volatile var deleted: Long = 0L,
                         @volatile var ann: AnnState = null)
 
@@ -127,13 +130,15 @@ class RestApi(spark: SparkSession) {
     */
   def register(name: String, df: DataFrame, dims: Int,
                metric: String = "cosine"): Unit = synchronized {
-    collections(name) = Coll(name, dims, metric, df.select(
+    val frame = df.select(
       col("id").cast("string").as("id"),
       col("vector").cast("array<float>").as("vector"),
       (if (df.columns.contains("metadata")) col("metadata").cast("string")
        else lit(null).cast("string")).as("metadata"),
       (if (df.columns.contains("ttl_expires_at")) col("ttl_expires_at").cast("long")
-       else lit(null).cast("long")).as("ttl_expires_at")))
+       else lit(null).cast("long")).as("ttl_expires_at"))
+    collections(name) = Coll(name, dims, metric, frame,
+      math.max(frame.rdd.getNumPartitions, spark.sparkContext.defaultParallelism))
   }
 
   /** The configured distance metric of a collection (None when absent).
@@ -236,9 +241,13 @@ class RestApi(spark: SparkSession) {
         "ALREADY_EXISTS")
     val metric = Option(req.get("distance")).map(_.asText()).getOrElse("cosine")
     collections(name) = Coll(name, dims, metric,
-      spark.createDataFrame(java.util.Collections.emptyList[Row](), schema))
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), schema),
+      spark.sparkContext.defaultParallelism)
     (201, mapper.writeValueAsString(obj2(_.put("created", name))))
   }
+
+  /** A collection's current frame (its rows and partition layout). */
+  private[graft] def collectionFrame(name: String): DataFrame = coll(name).df
 
   private def coll(name: String): Coll = synchronized {
     collections.getOrElse(name,
@@ -320,7 +329,9 @@ class RestApi(spark: SparkSession) {
         if (clash > 0)
           throw ApiException(409, "Vector id already exists", "DUPLICATE_ID")
       }
+      // the union appends the batch's partitions: coalesce them back
       c.df = c.df.filter(!col("id").isin(ids: _*)).unionByName(incoming)
+        .coalesce(c.maxPartitions)
         .localCheckpoint(false) // keep the lineage O(1) across mutations
       // keep the ANN snapshot live: appended rows enter their nearest
       // cell, replaced ids tombstone (LocalServe copy-on-write). Rows

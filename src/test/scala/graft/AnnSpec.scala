@@ -44,47 +44,7 @@ class AnnSpec extends SparkSpec {
     assert(scanned < emb.count())
   }
 
-  test("ivf batchSearch matches per-query search at every nprobe") {
-    val ix = Ivf.build(emb, col("embedding"), numCells = 8)
-    val queries = emb.filter(col("vec_id") < 5).orderBy("vec_id")
-      .select("embedding").collect()
-      .map(_.getSeq[Float](0).toArray).zipWithIndex.map(_.swap).toSeq
-    Seq(2, 8).foreach { nprobe =>
-      val batch = Ivf.batchSearch(ix, queries, 5, nprobe,
-        "vec_id", "embedding", roundTo = Some(6)).collect()
-        .groupBy(_.getInt(0))
-      queries.foreach { case (qid, qv) =>
-        val single = Ivf.search(ix, qv, 5, nprobe, "vec_id", "embedding",
-          roundTo = Some(6))
-          .select(col("vec_id").cast("long"), col("distance"))
-          .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
-        val got = batch(qid)
-          .map(r => (r.getLong(1), r.getDouble(2))).toSet
-        assert(got == single, s"nprobe=$nprobe query=$qid")
-      }
-    }
-  }
-
-  test("ivf batchSearchFused is row-identical to batchSearch") {
-    val queries = emb.filter(col("vec_id") < 5).orderBy("vec_id")
-      .select("embedding").collect()
-      .map(_.getSeq[Float](0).toArray).zipWithIndex.map(_.swap).toSeq
-    for (metric <- Seq("cosine", "euclidean", "dot");
-         nprobe <- Seq(2, 8)) {
-      val ix = Ivf.build(emb, col("embedding"), numCells = 8, metric)
-      def rows(df: org.apache.spark.sql.DataFrame) = df
-        .select(col("query_id"), col("vec_id").cast("long"), col("distance"))
-        .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
-        .sortBy(x => (x._1, x._3, x._2)).toSeq
-      val joined = rows(Ivf.batchSearch(ix, queries, 5, nprobe,
-        "vec_id", "embedding", roundTo = Some(6)))
-      val fused = rows(Ivf.batchSearchFused(ix, queries, 5, nprobe,
-        "vec_id", "embedding", roundTo = Some(6)))
-      assert(fused == joined, s"metric=$metric nprobe=$nprobe")
-    }
-  }
-
-  test("ivf batchSearchPacked is row-identical to batchSearch") {
+  test("ivf batchSearchPacked is row-identical to per-query Ivf.search") {
     val queries = emb.filter(col("vec_id") < 5).orderBy("vec_id")
       .select("embedding").collect()
       .map(_.getSeq[Float](0).toArray).zipWithIndex.map(_.swap).toSeq
@@ -96,8 +56,10 @@ class AnnSpec extends SparkSpec {
         .select(col("query_id"), col("vec_id").cast("long"), col("distance"))
         .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
         .sortBy(x => (x._1, x._3, x._2)).toSeq
-      val joined = rows(Ivf.batchSearch(ix, queries, 5, nprobe,
-        "vec_id", "embedding", roundTo = Some(6)))
+      val single = queries.flatMap { case (qid, qv) =>
+        rows(Ivf.search(ix, qv, 5, nprobe, "vec_id", "embedding",
+          roundTo = Some(6)).withColumn("query_id", lit(qid)))
+      }
       // both finishes: driver-side TopBuf merge and the distributed
       // bounded top-k aggregate (maxDriverMergeRows = 0 forces the latter)
       val packed = rows(Ivf.batchSearchPacked(px, queries, 5, nprobe,
@@ -105,8 +67,8 @@ class AnnSpec extends SparkSpec {
       val packedAgg = rows(Ivf.batchSearchPacked(px, queries, 5, nprobe,
         "vec_id", roundTo = Some(6), maxDriverMergeRows = 0L))
       px.unpersist()
-      assert(packed == joined, s"metric=$metric nprobe=$nprobe")
-      assert(packedAgg == joined, s"agg finish: metric=$metric nprobe=$nprobe")
+      assert(packed == single, s"metric=$metric nprobe=$nprobe")
+      assert(packedAgg == single, s"agg finish: metric=$metric nprobe=$nprobe")
     }
   }
 

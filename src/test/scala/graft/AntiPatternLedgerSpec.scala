@@ -26,14 +26,11 @@ class AntiPatternLedgerSpec extends AnyFunSuite {
   private val collectLedger: Map[String, Int] = Map(
     // measurement/CLI mains and the explorer TUI: driver-resident by
     // design — they print results
-    "BaselineBench.scala" -> 25,
+    "BaselineBench.scala" -> 21,
     "Bench.scala" -> 3,
     "Cli.scala" -> 4,
-    "DriftBench.scala" -> 2,
     // measurement main: warm-up + timed drain of each censused query plan
     "JobCensus.scala" -> 2,
-    // measurement main: force() drains each timed plan to the driver
-    "UdfVsHofBench.scala" -> 1,
     "Explorer.scala" -> 9,
     // ANN tiers: k-bounded result reads, centroid tables (numCells
     // rows), and the deliberately driver-resident LocalServe snapshot
@@ -134,9 +131,6 @@ class AntiPatternLedgerSpec extends AnyFunSuite {
   // BroadcastNestedLoopJoin with the 1-row side broadcast) or an
   // oracle-query equivalent
   private val crossJoinLedger: Map[String, Int] = Map(
-    // measurement main: range(k) × sf-table replication of the timed
-    // input — bounded by construction (100k rows), never a query path
-    "UdfVsHofBench.scala" -> 2,
     "ops/AdvancedSearch.scala" -> 2,
     "ops/CodeSearch.scala" -> 1,
     "ops/CollaborativeFiltering.scala" -> 2,

@@ -76,5 +76,6 @@ class CompressionAdvisorSpec extends SparkSpec {
     val best = report.recommendations.head.strategy
     if (best == "SQ8") assert(plan.exists(_.contains("sqEncode")))
     if (best.startsWith("PQ")) assert(plan.exists(_.contains("pqEncode")))
+    if (best == "Binary") assert(plan.exists(_.contains("bqSearchRerank")))
   }
 }

@@ -33,9 +33,8 @@ class PersistLedgerSpec extends AnyFunSuite {
 
   private val ledger: Map[String, Int] = Map(
     // process-lifetime: measurement/CLI mains
-    "BaselineBench.scala" -> 6,
+    "BaselineBench.scala" -> 5,
     "Cli.scala" -> 1,
-    "DriftBench.scala" -> 2,
     // released-in-finally (FailurePathReleaseSpec covers analyze)
     "ann/CompressionAdvisor.scala" -> 1,
     // explicit-release API: index blocks expose unpersist(); callers /

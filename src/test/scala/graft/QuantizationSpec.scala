@@ -108,97 +108,6 @@ class QuantizationSpec extends SparkSpec {
     assert(graft.ann.Ivf.recallAtK(exact, top, "vec_id") >= 0.9)
   }
 
-  test("batched BQ two-phase degenerates to exact per-query top-k") {
-    import graft.ann.Ivf
-    val bq = Quantization.trainBq(emb, col("embedding"))
-    val base = emb.withColumn("codes",
-      Quantization.bqEncodeLongs(bq)(col("embedding")))
-    // long packing agrees with the byte packing bit for bit
-    val row = base.withColumn("bytes",
-      Quantization.bqEncode(bq)(col("embedding")))
-      .select("codes", "bytes").head()
-    val longs = row.getSeq[Long](0)
-    val bytes = row.getAs[Array[Byte]](1)
-    (0 until dims).foreach { i =>
-      val fromLong = (longs(i >> 6) >>> (i & 63)) & 1L
-      val fromByte = (bytes(i / 8) >> (i % 8)) & 1
-      assert(fromLong == fromByte, s"bit $i")
-    }
-    val ix = Ivf.build(base, col("embedding"), numCells = 4)
-    val queries = emb.filter(col("vec_id") < 5).orderBy("vec_id")
-      .select("embedding").collect()
-      .map(_.getSeq[Float](0).toArray).zipWithIndex.map(_.swap).toSeq
-    // full probe + oversample spanning the corpus → the coarse pass keeps
-    // every row, so the result IS the exact top-k
-    val got = Quantization.batchBqSearchRerank(ix, bq, queries, k = 5,
-      nprobe = 4, oversample = 100, idCol = "vec_id",
-      vecCol = "embedding", roundTo = Some(6)).collect()
-      .groupBy(_.getInt(0))
-    queries.foreach { case (qid, qv) =>
-      val exact = emb.withColumn("d",
-          round(Distances.cosine(col("embedding"), lit(qv)), 6))
-        .orderBy(col("d").asc, col("vec_id").asc).limit(5)
-        .select(col("vec_id").cast("long"), col("d"))
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
-      val mine = got(qid).map(r => (r.getLong(1), r.getDouble(2))).toSet
-      assert(mine == exact, s"query $qid")
-    }
-    // pruned, modest oversample: recall stays high on this corpus
-    val pruned = Quantization.batchBqSearchRerank(ix, bq, queries, k = 5,
-      nprobe = 4, oversample = 8, idCol = "vec_id", vecCol = "embedding")
-      .collect().groupBy(_.getInt(0))
-    val recalls = queries.map { case (qid, qv) =>
-      val exact = emb.withColumn("d",
-          Distances.cosine(col("embedding"), lit(qv)))
-        .orderBy(col("d").asc, col("vec_id").asc).limit(5)
-        .select(col("vec_id").cast("long")).collect().map(_.getLong(0)).toSet
-      val mine = pruned(qid).map(_.getLong(1)).toSet
-      exact.intersect(mine).size / 5.0
-    }
-    assert(recalls.sum / recalls.length >= 0.6,
-      s"BQ pre-rank recall collapsed: $recalls")
-  }
-
-  test("batched residual-BQ two-phase degenerates to exact top-k") {
-    import graft.ann.{Ivf, Quantization}
-    val ix0 = Ivf.build(emb, col("embedding"), numCells = 4)
-    val withCodes = ix0.assigned.withColumn("codes",
-      Quantization.residualBqEncodeLongs(ix0.centroids)(
-        col("embedding"), col("cell")))
-    val ix = ix0.copy(assigned = withCodes)
-    val queries = emb.filter(col("vec_id") < 5).orderBy("vec_id")
-      .select("embedding").collect()
-      .map(_.getSeq[Float](0).toArray).zipWithIndex.map(_.swap).toSeq
-    val got = Quantization.batchResidualBqSearchRerank(ix, queries, k = 5,
-      nprobe = 4, oversample = 100, idCol = "vec_id",
-      vecCol = "embedding", roundTo = Some(6)).collect()
-      .groupBy(_.getInt(0))
-    queries.foreach { case (qid, qv) =>
-      val exact = emb.withColumn("d",
-          round(Distances.cosine(col("embedding"), lit(qv)), 6))
-        .orderBy(col("d").asc, col("vec_id").asc).limit(5)
-        .select(col("vec_id").cast("long"), col("d"))
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
-      val mine = got(qid).map(r => (r.getLong(1), r.getDouble(2))).toSet
-      assert(mine == exact, s"query $qid")
-    }
-    // residual pre-rank at modest oversample keeps recall at least as
-    // good as the global-bit form on the same corpus
-    val pruned = Quantization.batchResidualBqSearchRerank(ix, queries,
-      k = 5, nprobe = 4, oversample = 8, idCol = "vec_id",
-      vecCol = "embedding").collect().groupBy(_.getInt(0))
-    val recalls = queries.map { case (qid, qv) =>
-      val exact = emb.withColumn("d",
-          Distances.cosine(col("embedding"), lit(qv)))
-        .orderBy(col("d").asc, col("vec_id").asc).limit(5)
-        .select(col("vec_id").cast("long")).collect().map(_.getLong(0)).toSet
-      val mine = pruned(qid).map(_.getLong(1)).toSet
-      exact.intersect(mine).size / 5.0
-    }
-    assert(recalls.sum / recalls.length >= 0.6,
-      s"residual BQ pre-rank recall collapsed: $recalls")
-  }
-
   test("binary quantizer packs sign bits and ranks near-dups first") {
     val bq = Quantization.trainBq(emb, col("embedding"))
     assert(bq.dims == dims)

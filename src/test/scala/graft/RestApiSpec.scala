@@ -375,6 +375,43 @@ class RestApiSpec extends SparkSpec {
       .forall(id => id.stripPrefix("r").toInt >= 5), "expired rows excluded")
   }
 
+  test("upsert-batch keeps the partition count bounded and answers exact") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val a = new RestApi(spark)
+    def vec(i: Int): Seq[Float] =
+      Seq((i % 7 + 1).toFloat, (i % 5).toFloat, (i % 3 - 1).toFloat)
+    def frame(rows: Seq[(String, Seq[Float])], parts: Int) =
+      rows.toDF("id", "vector").repartition(parts, col("id"))
+    var rows = (0 until 30).map(i => s"r$i" -> vec(i)).toMap
+    a.register("w", frame(rows.toSeq, 3), dims = 3)
+    val bound = math.max(a.collectionFrame("w").rdd.getNumPartitions,
+      spark.sparkContext.defaultParallelism)
+    (0 until 20).foreach { i =>
+      // one replaced id and one new id per batch
+      val batch = Seq(s"r$i" -> vec(i + 100), s"n$i" -> vec(i + 200))
+      val body = batch.map { case (id, v) =>
+        s"""{"id":"$id","vector":[${v.mkString(",")}]}"""
+      }.mkString("""{"vectors":[""", ",", "]}")
+      val (s, out) = a.handle("POST",
+        "/collections/w/vectors/upsert-batch", body)
+      assert(s == 200, out)
+      rows ++= batch
+    }
+    val parts = a.collectionFrame("w").rdd.getNumPartitions
+    assert(parts <= bound, s"$parts partitions after 20 writes > $bound")
+    a.register("ref", frame(rows.toSeq, 2), dims = 3)
+    Seq(vec(0), vec(113), vec(205)).foreach { q =>
+      val req = s"""{"vector":[${q.mkString(",")}],"k":10}"""
+      def results(c: String) = {
+        val (s, out) = a.handle("POST", s"/collections/$c/search", req)
+        assert(s == 200, out)
+        mapper.readTree(out).get("results")
+      }
+      assert(results("w") == results("ref"), s"query $q")
+    }
+  }
+
   test("build_index refuses an oversized collection via the CHEAP " +
       "pre-guard, before any ranking/checkpoint work") {
     val a = api

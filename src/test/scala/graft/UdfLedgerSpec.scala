@@ -22,7 +22,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    simhash/minhash/rolling-hash, Gopher/C4/langID counting passes,
   *    RFC-7386 JSON merge, JSON-schema validation, sentence chunking,
   *    entity extraction). Measured on THIS engine, r16
-  *    (bench_history/udf_vs_hof_r16.json, UdfVsHofBench, min of 5 at
+  *    (bench_history/udf_vs_hof_r16.json, min of 5 at
   *    100k rows): gopherCounts UDF beats the per-token/per-line rlike
   *    formulation ~7× even while computing strictly more; the
   *    tokenizer UDF is at parity with split+filter(isInCollection) and
@@ -56,10 +56,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *    worse: it bloats the plan quadratically with the plane count for
   *    a pass whose cost is dominated by the scan. The query path
   *    (Hamming top-k) is already pure expressions.
-  *  - UdfVsHofBench.scala `rowStatsCounterfactualUdf`: the RETIRED
-  *    DataProfiler rowStats UDF, kept only as the timed strawman the
-  *    r16 measurement beat (boxing — see the class-boundary note
-  *    above). It is never on a query path; a production re-use of it
+  *  - the RETIRED DataProfiler rowStats UDF measured slower than its
+  *    expression form (boxing — see the class-boundary note above;
+  *    bench_history/udf_vs_hof_r16.json). A production re-use of it
   *    would need a fresh adjudication here.
   *
   * Growth fails until the new site is adjudicated here; shrinkage fails
@@ -126,17 +125,13 @@ class UdfLedgerSpec extends AnyFunSuite {
     "core/Validation.scala" -> 1,
     // closure-model: hyperplane encode — see header adjudication
     "ann/EncryptedSearch.scala" -> 1,
-    // measured counterfactual ONLY (not a production operator): the
-    // retired rowStats UDF formulation, kept solely as UdfVsHofBench's
-    // timed strawman — see header adjudication
-    "UdfVsHofBench.scala" -> 1,
     // byte-packing: fp16/bf16 encode + decode
     "ann/HalfPrecision.scala" -> 2,
     // closure-model: fitted projection/PCA matrix-vector transforms
     "ann/DimReduce.scala" -> 3,
     // closure-model + byte-packing: SQ8/PQ/BQ codebooks over packed
-    // code words (encode ×5, decode/ADC distance ×4)
-    "ann/Quantization.scala" -> 9,
+    // code words (encode ×3, decode/ADC distance ×4)
+    "ann/Quantization.scala" -> 7,
     // user-supplied: plugin distance + embedding transformer contracts
     "plugins/Plugins.scala" -> 2)
 
