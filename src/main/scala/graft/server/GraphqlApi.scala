@@ -430,66 +430,43 @@ final class GraphqlApi(api: RestApi, version: String = "0.1.0") {
     Option(n.get(name)).filterNot(_.isNull)
       .getOrElse(throw GqlError(s"missing input field '$name'"))
 
-  /** Host `POST /graphql` (and `GET /graphql/sdl` for schema
-    * discovery) on the JDK HttpServer, same shape as [[RestApi.serve]];
-    * port 0 picks a free port.
+  /** Host `POST /graphql` and `GET /graphql/sdl` (schema discovery) on
+    * [[Http]]; port 0 picks a free port.
     */
-  def serve(port: Int = 0): com.sun.net.httpserver.HttpServer = {
-    val server = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", port), 0)
-    server.createContext("/graphql",
-      (ex: com.sun.net.httpserver.HttpExchange) => {
-        val body = new String(ex.getRequestBody.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8)
-        val utf8 = java.nio.charset.StandardCharsets.UTF_8
-        // graphql-sse: a subscription POSTed with Accept:
-        // text/event-stream streams one `next` frame per event (frames
-        // are materialized up front, then written and flushed one at a
-        // time) and a terminal `complete` frame
-        val wantsSse = ex.getRequestMethod == "POST" &&
-          Option(ex.getRequestHeaders.getFirst("Accept"))
-            .exists(_.contains("text/event-stream"))
-        val sseFrames =
-          if (!wantsSse) None
-          else try subscriptionSseFrames(body)
-          catch { case _: Exception => None } // 400 via the normal path
-        sseFrames match {
-          case Some(frames) =>
-            ex.getResponseHeaders.add("Content-Type", "text/event-stream")
-            ex.sendResponseHeaders(200, 0) // chunked
-            val out = ex.getResponseBody
-            frames.foreach { f =>
-              out.write(s"event: next\ndata: $f\n\n".getBytes(utf8))
-              out.flush()
-            }
-            out.write("event: complete\ndata:\n\n".getBytes(utf8))
-            ex.close()
-          case None =>
-            val (status, resp) =
-              (ex.getRequestMethod, ex.getRequestURI.getPath) match {
-                case ("GET", "/graphql/sdl") => (200, GraphqlApi.sdl)
-                case ("POST", _)             => handle(body)
-                case (m, p) =>
-                  // build with the mapper: p is percent-decoded and
-                  // must not be interpolated into a JSON literal
-                  // (WebUi's 404 lesson)
-                  val o = mapper.createObjectNode()
-                  o.putArray("errors").addObject()
-                    .put("message", s"no route for $m $p")
-                  (405, mapper.writeValueAsString(o))
-              }
-            val bytes = resp.getBytes(utf8)
-            ex.getResponseHeaders.add("Content-Type",
-              if (ex.getRequestURI.getPath.endsWith("/sdl")) "text/plain"
-              else "application/json")
-            ex.sendResponseHeaders(status, bytes.length)
-            ex.getResponseBody.write(bytes)
-            ex.close()
+  def serve(port: Int = 0): com.sun.net.httpserver.HttpServer =
+    Http.serve(port, "/graphql") { (method, uri, headers, body) =>
+      val utf8 = java.nio.charset.StandardCharsets.UTF_8
+      // graphql-sse: a subscription POSTed with Accept: text/event-stream
+      // streams one `next` frame per event (materialized up front, then
+      // written and flushed one at a time) and a terminal `complete` frame
+      val wantsSse = method == "POST" &&
+        Option(headers.getFirst("Accept"))
+          .exists(_.contains("text/event-stream"))
+      val sseFrames =
+        if (!wantsSse) None
+        else try subscriptionSseFrames(body)
+        catch { case _: Exception => None } // 400 via the normal path
+      sseFrames match {
+        case Some(frames) =>
+          Http.Chunks(200, "text/event-stream",
+            frames.map(f => s"event: next\ndata: $f\n\n".getBytes(utf8)) :+
+              "event: complete\ndata:\n\n".getBytes(utf8))
+        case None => (method, uri.getPath) match {
+          case ("GET", "/graphql/sdl") =>
+            Http.text(200, "text/plain", GraphqlApi.sdl)
+          case ("POST", _) =>
+            val (status, resp) = handle(body)
+            Http.json(status, resp)
+          case (m, p) =>
+            // build with the mapper: p is percent-decoded and must not be
+            // interpolated into a JSON literal (WebUi's 404 lesson)
+            val o = mapper.createObjectNode()
+            o.putArray("errors").addObject()
+              .put("message", s"no route for $m $p")
+            Http.json(405, mapper.writeValueAsString(o))
         }
-      })
-    server.start()
-    server
-  }
+      }
+    }
 
   // ------------------------------------------------- argument coercion
 

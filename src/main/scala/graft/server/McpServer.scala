@@ -650,21 +650,7 @@ class McpServer(api: RestApi, readOnly: Boolean = false) {
     }
   }
 
-  /** HTTP transport: JSON-RPC over POST /mcp. */
-  def serve(port: Int = 0): com.sun.net.httpserver.HttpServer = {
-    val server = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", port), 0)
-    server.createContext("/mcp", (ex: com.sun.net.httpserver.HttpExchange) => {
-      val body = new String(ex.getRequestBody.readAllBytes(),
-        StandardCharsets.UTF_8)
-      val resp = handle(body)
-      val bytes = resp.getBytes(StandardCharsets.UTF_8)
-      ex.getResponseHeaders.add("Content-Type", "application/json")
-      ex.sendResponseHeaders(200, bytes.length)
-      ex.getResponseBody.write(bytes)
-      ex.close()
-    })
-    server.start()
-    server
-  }
+  /** HTTP transport: JSON-RPC over POST /mcp, hosted on [[Http]]. */
+  def serve(port: Int = 0): com.sun.net.httpserver.HttpServer =
+    Http.serve(port, "/mcp") { (_, _, _, body) => Http.json(200, handle(body)) }
 }

@@ -35,7 +35,8 @@ import graft.ops.Search
   * collection can be a registered parquet table of any size; only the
   * k-bounded result page is collected. [[handle]] is a pure
   * (method, path, body) → (status, json) function so the whole contract is
-  * testable in-process; [[serve]] hosts it on the JDK's HttpServer (no new
+  * testable in-process; [[serve]] hosts it on [[Http]], the JDK
+  * HttpServer with `TCP_NODELAY` that hosts every served surface (no new
   * dependencies), one Spark job per request like any multi-tenant driver.
   *
   * Cluster caveats (the honest scope of this contract layer):
@@ -743,24 +744,12 @@ class RestApi(spark: SparkSession) {
 
   // ---------------------------------------------------------------- host
 
-  /** Host [[handle]] on the JDK HttpServer; returns the bound port. */
-  def serve(port: Int = 0): com.sun.net.httpserver.HttpServer = {
-    val server = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", port), 0)
-    server.createContext("/", (ex: com.sun.net.httpserver.HttpExchange) => {
-      val body = new String(ex.getRequestBody.readAllBytes(),
-        StandardCharsets.UTF_8)
-      val (status, resp) = handle(ex.getRequestMethod,
-        ex.getRequestURI.toString, body)
-      val bytes = resp.getBytes(StandardCharsets.UTF_8)
-      ex.getResponseHeaders.add("Content-Type", "application/json")
-      ex.sendResponseHeaders(status, bytes.length)
-      ex.getResponseBody.write(bytes)
-      ex.close()
-    })
-    server.start()
-    server
-  }
+  /** Host [[handle]] on [[Http]]; returns the started server. */
+  def serve(port: Int = 0): com.sun.net.httpserver.HttpServer =
+    Http.serve(port) { (method, uri, _, body) =>
+      val (status, resp) = handle(method, uri.toString, body)
+      Http.json(status, resp)
+    }
 
   // ------------------------------------------------------------- plumbing
 

@@ -393,28 +393,12 @@ final class WebUi(api: RestApi, ql: Option[NeedleSession] = None,
         .stripMargin)
   }
 
-  /** Host the dashboard on the JDK HttpServer (same shape as
-    * [[RestApi.serve]]); port 0 picks a free port. The UI and the REST
-    * API can share a server by mounting this under a prefix, but the
-    * default is a standalone dashboard process.
-    */
-  def serve(port: Int = 0): com.sun.net.httpserver.HttpServer = {
-    val server = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", port), 0)
-    server.createContext("/", (ex: com.sun.net.httpserver.HttpExchange) => {
-      val body = new String(ex.getRequestBody.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8)
-      val (status, contentType, resp) = handle(ex.getRequestMethod,
-        ex.getRequestURI.toString, body)
-      val bytes = resp.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      ex.getResponseHeaders.add("Content-Type", contentType)
-      ex.sendResponseHeaders(status, bytes.length)
-      ex.getResponseBody.write(bytes)
-      ex.close()
-    })
-    server.start()
-    server
-  }
+  /** Host the dashboard on [[Http]]; port 0 picks a free port. */
+  def serve(port: Int = 0): com.sun.net.httpserver.HttpServer =
+    Http.serve(port) { (method, uri, _, body) =>
+      val (status, contentType, resp) = handle(method, uri.toString, body)
+      Http.text(status, contentType, resp)
+    }
 
   private def visualizePage(): String = {
     val options = collectionNames()

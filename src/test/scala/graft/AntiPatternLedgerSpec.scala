@@ -157,6 +157,12 @@ class AntiPatternLedgerSpec extends AnyFunSuite {
     // come from the memoized Index.corpusStats instead of cross-joining
     // the 1-row corpus table into every query's stats job
 
+  // the JDK reads sun.net.httpserver.nodelay once, at the JVM's first
+  // HttpServer; server.Http sets it first, so every server and every
+  // response write must go through it
+  private val httpHostLedger: Map[String, Int] = Map(
+    "server/Http.scala" -> 3)
+
   private val root = Paths.get("src/main/scala/graft")
 
   private def isComment(line: String): Boolean = {
@@ -197,5 +203,10 @@ class AntiPatternLedgerSpec extends AnyFunSuite {
 
   test("every crossJoin in main is on the adjudicated ledger, exactly") {
     check("crossJoin", """crossJoin\(""".r, crossJoinLedger)
+  }
+
+  test("HttpServer.create and sendResponseHeaders appear only in server.Http") {
+    check("HTTP host", """HttpServer\.create|sendResponseHeaders""".r,
+      httpHostLedger)
   }
 }

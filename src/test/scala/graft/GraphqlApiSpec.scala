@@ -346,6 +346,7 @@ class GraphqlApiSpec extends SparkSpec {
       assert(st3 == 405)
       assert(mapper.readTree(notAllowed).get("errors").get(0)
         .get("message").asText().contains("no route"))
+      HttpRoundTrip.assertNoAckStall(port, "/graphql/sdl")
     } finally server.stop(0)
   }
 
@@ -387,6 +388,13 @@ class GraphqlApiSpec extends SparkSpec {
       val data0 = text.linesIterator.find(_.startsWith("data: {")).get
       assert(mapper.readTree(data0.drop(6)).get("data")
         .get("searchStream").get("sequence").asInt() == 0)
+      // the subscription's exact search runs a Spark job (tens of ms):
+      // compare the transport's share, not the whole round trip
+      val subBody = mapper.writeValueAsString(
+        mapper.createObjectNode().put("query", sub))
+      HttpRoundTrip.assertNoAckStall(server.getAddress.getPort, "/graphql",
+        Some(subBody), Seq("Accept" -> "text/event-stream"),
+        inProcess = Some(() => g.subscriptionSseFrames(subBody)))
     } finally server.stop(0)
   }
 

@@ -1,14 +1,13 @@
 package graft
 
-import java.net.InetSocketAddress
-import java.nio.charset.StandardCharsets
 import java.util.concurrent.atomic.AtomicInteger
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.HttpServer
 import org.apache.spark.sql.functions._
 
 import graft.multimodal.{HttpEmbeddingBackend, Multimodal}
+import graft.server.Http
 
 /** Contract test for the reference-shaped HTTP embedding provider
   * (auto_embed.rs:44-140 wire format) against an in-process stub server —
@@ -34,14 +33,12 @@ class HttpEmbeddingSpec extends SparkSpec
 
   override def beforeAll(): Unit = {
     super.beforeAll()
-    server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
-    server.createContext("/v1/embeddings", (ex: HttpExchange) => {
+    // through graft.server.Http like every server in this JVM: the first
+    // JDK HttpServer created fixes whether any of them gets TCP_NODELAY
+    server = Http.serve(0, "/v1/embeddings") { (_, _, _, body) =>
       requests.incrementAndGet()
-      val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
       if (failFirst.getAndUpdate(n => math.max(0, n - 1)) > 0) {
-        val msg = "{\"error\":\"overloaded\"}".getBytes(StandardCharsets.UTF_8)
-        ex.sendResponseHeaders(503, msg.length)
-        ex.getResponseBody.write(msg)
+        Http.json(503, "{\"error\":\"overloaded\"}")
       } else {
         val root = mapper.readTree(body)
         assert(root.get("model").asText() == "stub-embed")
@@ -62,14 +59,9 @@ class HttpEmbeddingSpec extends SparkSpec
           val arr = entry.putArray("embedding")
           stubVector(in.get(i).asText()).foreach(arr.add)
         }
-        val bytes = mapper.writeValueAsString(resp).getBytes(StandardCharsets.UTF_8)
-        ex.getResponseHeaders.add("Content-Type", "application/json")
-        ex.sendResponseHeaders(200, bytes.length)
-        ex.getResponseBody.write(bytes)
+        Http.json(200, mapper.writeValueAsString(resp))
       }
-      ex.close()
-    })
-    server.start()
+    }
     endpoint = s"http://127.0.0.1:${server.getAddress.getPort}/v1/embeddings"
   }
 

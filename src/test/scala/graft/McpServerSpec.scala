@@ -225,6 +225,8 @@ class McpServerSpec extends SparkSpec {
         conn.getInputStream.readAllBytes(), "UTF-8"))
       assert(resp.get("id").asInt() == 7)
       assert(resp.get("result").get("tools").size() == referenceTools.size)
+      HttpRoundTrip.assertNoAckStall(port, "/mcp",
+        Some("""{"jsonrpc":"2.0","id":8,"method":"tools/list"}"""))
     } finally server.stop(0)
   }
 }

@@ -536,4 +536,10 @@ class RestApiSpec extends SparkSpec {
       assert(call("GET", "/collections/missing", "").statusCode() == 404)
     } finally server.stop(0)
   }
+
+  test("HTTP round trip is not held by delayed ACK") {
+    val server = api.serve(0)
+    try HttpRoundTrip.assertNoAckStall(server.getAddress.getPort, "/health")
+    finally server.stop(0)
+  }
 }

@@ -178,6 +178,7 @@ class WebUiSpec extends SparkSpec {
         .orElse("").startsWith("text/html"))
       assert(dash.body().contains("docs"))
       assert(get("/nope").statusCode() == 404)
+      HttpRoundTrip.assertNoAckStall(port, "/health")
     } finally server.stop(0)
   }
 

@@ -2,6 +2,8 @@
 # Run a graft main class without sbt (frees the sbt lock during long
 # benches; mirrors build.sbt's fork javaOptions).
 MAIN=$1; shift
+# this checkout's own classes, wherever it is
+CLASSES="$(cd "$(dirname "$0")/.." && pwd)/target/scala-2.13/classes"
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
@@ -16,5 +18,5 @@ exec java $OPENS \
   -Dspark.sql.session.timeZone=UTC \
   -Dspark.sql.artifact.isolation.enabled=false \
   -Xmx"${SPARK_DRIVER_MEM:-24g}" \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$CLASSES:/opt/spark/jars/*" \
   "$MAIN" "$@"
