@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import com.fasterxml.jackson.core.JsonGenerator
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ann.Ivf
@@ -53,7 +53,7 @@ object BaselineBench {
     (1 to runs).map(_ => timeMs(f)._2).min
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val n = sys.env.getOrElse("SPARK_GRAFT_BASE_N", "1000000").toLong
     val dims = sys.env.getOrElse("SPARK_GRAFT_BASE_DIMS", "384").toInt
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
@@ -76,25 +76,16 @@ object BaselineBench {
       sys.exit(2)
     }
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      // LocalServe.fromIndex collects the 1M×384 snapshot (~1.5 GB
-      // serialized) — above the 1 GiB maxResultSize default
-      .config("spark.driver.maxResultSize", "4g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // LocalServe.fromIndex collects the 1M×384 snapshot (~1.5 GB
+    // serialized) — above the 1 GiB maxResultSize default
+    val spark = Session.local(cpus, "spark.driver.maxResultSize" -> "4g")
     import spark.implicits._
 
     // ---- data: 1000 clusters, 15% noise, 10% selectivity label ---------
     val path = s"$dataDir/vectors.parquet"
     if (!Files.exists(Paths.get(path))) {
       System.err.println(s"[baseline] generating $n x $dims at $path")
-      spark.range(n).repartition(cpus.toInt)
+      spark.range(n).repartition(cpus)
         .select(col("id"),
           expr(s"""transform(sequence(0, ${dims - 1}), j -> cast(
                   |  (pmod(xxhash64(pmod(xxhash64(id, 1), 1000), j, 3), 1000000)/500000.0 - 1.0)
@@ -492,8 +483,7 @@ object BaselineBench {
       else java.math.BigDecimal.valueOf(d).setScale(if (d >= 100) 1 else 4,
         java.math.RoundingMode.HALF_UP)
     val doc = mapper.createObjectNode().put("shape", s"${total}x$dims")
-    doc.set[JsonNode]("cpus",
-      mapper.valueToTree[JsonNode](cpus.toIntOption.map(Int.box).getOrElse(cpus)))
+    doc.put("cpus", cpus)
     doc.put("runs", runs)
     val comparison = doc.putObject("comparison")
     refRows.foreach { case (k, ref, got) =>

@@ -4,7 +4,6 @@ import java.nio.file.Files
 import com.fasterxml.jackson.core.JsonGenerator
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark surface: one JSON line with per-query wall times.
   *
@@ -58,38 +57,14 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val (loadStart, runnableStart) = hostLoad()
     var loadMax = loadStart
     var runnableMax = runnableStart
     // 3 runs: the first absorbs warm-up, the median of 3 is stable, and
     // 100 queries x 5 runs was brushing against the driver's time budget
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // avoid RPC-backed executor class loading (see build.sbt javaOptions)
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      // bounded-buffer aggregates (TopKAgg) keep k·16 bytes per group —
-      // the 128-group default silently degrades them to sort-based
-      // aggregation (sorts EVERY scored row, the cost the aggregate
-      // exists to avoid). 64k groups/task ≈ 10 MB at k=10: safe.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      // let AQE size cached-plan partitions from runtime statistics
-      // (guide §2: scale-adaptive partitioning). Without it a cached
-      // frame freezes spark.sql.shuffle.partitions at build time: tiny
-      // postings/stat tables carry cpus-many near-empty partitions into
-      // every consuming stage locally, and at scale a cached plan can't
-      // benefit from AQE's size-based coalescing or skew handling.
-      // Interleaved 10-run A/B (knn_cosine control flat): bm25_search
-      // 0.376->0.231 s, hybrid_rrf 0.492->0.313, bm25_incremental
-      // 0.366->0.281; no query slower (SPARK_GRAFT_CACHE_AQE=false
-      // restores the old behavior for A/B).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus)
     // Warm up the JVM/codegen/IO paths once so the first measured query
     // does not absorb session initialization (standard bench practice).
     spark.range(1000000).selectExpr("sum(id)").collect()
@@ -190,8 +165,7 @@ object Bench {
         .put("total", num(total, 2))
         .put("sf", new java.io.File(sfDir).getName)
         .put("runs", runs)
-      doc.set[JsonNode]("cpus",
-        json.valueToTree[JsonNode](cpus.toIntOption.map(Int.box).getOrElse(cpus)))
+      doc.put("cpus", cpus)
       doc.putObject("host")
         .put("cpus_host", Runtime.getRuntime.availableProcessors)
         .put("load_start", num(loadStart, 2)).put("load_max", num(loadMax, 2))

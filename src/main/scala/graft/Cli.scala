@@ -512,19 +512,8 @@ object Cli {
     }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .appName("graft-cli")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "65536")
-    // spark-submit sets spark.master; standalone runs default to local
-    val spark = (if (sys.props.contains("spark.master")) builder
-                 else builder.master(s"local[$cpus]")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Session.local(cpus)
     val code = run(spark, args.toSeq)
     spark.stop()
     if (code != 0) sys.exit(code)

@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-quality inspector: prints the formatted physical plan of each named
   * query (or all) so pushed filters, broadcast joins, partial aggregates and
-  * TakeOrderedAndProject spans can be audited.
+  * TakeOrderedAndProject spans can be audited. The plans are those of the
+  * engine's own session (`Session.local`).
   *
   *   sbt "runMain graft.Explain <sfDir> [queryName ...]"
   */
@@ -13,16 +12,8 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // see Bench: AQE sizes cached-plan partitions (scale-adaptive)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Session.local(cpus)
     names.foreach { name =>
       println(s"\n========== $name ==========")
       try println(SparkEntry.queries(name)(spark, sfDir)

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 
 /** Spark session extension entry point — installs the engine's SQL surface
-  * into any session at builder time:
+  * into a session at builder time. Every engine session gets it from
+  * [[Session.local]]; a third-party session installs it with
   *
   * {{{
   *   SparkSession.builder()
@@ -11,9 +12,10 @@ import org.apache.spark.sql.SparkSessionExtensions
   *     .config("spark.sql.extensions", "graft.GraftExtensions")
   * }}}
   *
-  * Registers the seven codegen'd `dist_<metric>(a, b)` functions
+  * Registers one codegen'd `dist_<metric>(a, b)` function per [[graft.functions.Metric]]
   * (SURVEY.md §4.2 — the only custom Catalyst surface the engine needs;
-  * everything else is expressible with built-in operators).
+  * everything else is expressible with built-in operators). This is the
+  * only registration path for `dist_*`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -1,36 +1,21 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Diagnostic main (optimization-round tooling, guide §1): runs the named
   * queries once warm, then reports scheduled jobs / stages / tasks and
   * wall time for ONE further execution. A query whose wall time ≈
   * jobs × 40–80 ms of driver latency is SCHEDULED-WORK bound (the r20
   * session-3 census finding) — the lever is fewer jobs/stages, not faster
-  * kernels. Usage:
+  * kernels. It runs on the engine's own session (`Session.local`). Usage:
   *   SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 \
   *     sbt "runMain graft.JobCensus q1 q2 ..."
   */
 object JobCensus {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // see Bench: AQE sizes cached-plan partitions (scale-adaptive)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "true"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      // diagnostic toggle: census with/without AQE to attribute per-job
-      // fixed cost (AQE materializes each exchange as its own job)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Session.local(cpus)
     @volatile var jobs = 0
     @volatile var stages = 0
     @volatile var tasks = 0

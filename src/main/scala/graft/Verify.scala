@@ -1,6 +1,5 @@
 package graft
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,21 +8,8 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // optional extra args: run only the named queries (local iteration)
     val only: Set[String] = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // avoid RPC-backed executor class loading (see build.sbt javaOptions)
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      // see Bench: keep bounded top-k aggregates in hash mode
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      // see Bench: AQE sizes cached-plan partitions (scale-adaptive)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Session.local(cpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

@@ -114,13 +114,4 @@ object Distances {
   def manhattan(a: Column, b: Column): Column = distance(Metric.Manhattan, a, b)
   def hamming(a: Column, b: Column): Column = distance(Metric.Hamming, a, b)
   def chebyshev(a: Column, b: Column): Column = distance(Metric.Chebyshev, a, b)
-
-  /** Register `dist_<metric>(a, b)` SQL functions on a session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    Metric.all.foreach { m =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        s"dist_${m.name}",
-        exprs => VectorDistance(exprs(0), exprs(1), m),
-        "built-in")
-    }
 }

@@ -163,6 +163,12 @@ class AntiPatternLedgerSpec extends AnyFunSuite {
   private val httpHostLedger: Map[String, Int] = Map(
     "server/Http.scala" -> 3)
 
+  // the engine's session configuration (shuffle partitions, TopKAgg
+  // fallback, cached-plan AQE, GraftExtensions) lives in one factory;
+  // a second builder is a second copy that drifts
+  private val sessionBuilderLedger: Map[String, Int] = Map(
+    "Session.scala" -> 1)
+
   private val root = Paths.get("src/main/scala/graft")
 
   private def isComment(line: String): Boolean = {
@@ -208,5 +214,10 @@ class AntiPatternLedgerSpec extends AnyFunSuite {
   test("HttpServer.create and sendResponseHeaders appear only in server.Http") {
     check("HTTP host", """HttpServer\.create|sendResponseHeaders""".r,
       httpHostLedger)
+  }
+
+  test("Spark session builders appear only in graft.Session") {
+    check("session builder", """SparkSession\.builder""".r,
+      sessionBuilderLedger)
   }
 }

@@ -89,7 +89,6 @@ class DistancesSpec extends SparkSpec {
   }
 
   test("SQL registration: dist_* functions") {
-    Distances.register(spark)
     val got = Seq((Array(1f, 0f), Array(0f, 1f))).toDF("a", "b")
       .selectExpr("dist_euclidean(a, b)").as[Double].head()
     assert(math.abs(got - math.sqrt(2)) < 1e-12)

@@ -121,12 +121,22 @@ class GraftExtensionsSpec extends SparkSpec {
     val ext = new graft.GraftExtensions
     val target = new org.apache.spark.sql.SparkSessionExtensions
     ext(target) // registers one function builder per metric; must not throw
-    // and the builders produce working expressions
-    import spark.implicits._
-    graft.functions.Distances.register(spark)
+    // and the session's installed builders produce working expressions
     val got = Seq((Array(3f, 4f), Array(0f, 0f))).toDF("a", "b")
       .selectExpr("dist_euclidean(a, b)").as[Double].head()
     assert(got == 5.0)
+  }
+
+  test("SparkSpec runs the engine session: its conf and dist_* with no register call") {
+    val conf = spark.conf
+    assert(conf.get("spark.sql.objectHashAggregate.sortBased.fallbackThreshold") == "65536")
+    assert(conf.get("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") == "true")
+    assert(conf.get("spark.sql.session.timeZone") == "UTC")
+    val v = Seq((Array(1f, 0f), Array(0f, 1f))).toDF("a", "b")
+    val cos = v.selectExpr("dist_cosine(a, b)").as[Double].head()
+    assert(math.abs(cos - 1.0) < 1e-12)
+    val l2 = v.selectExpr("dist_euclidean(a, b)").as[Double].head()
+    assert(math.abs(l2 - math.sqrt(2)) < 1e-12)
   }
 
 }

@@ -14,9 +14,6 @@ for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
 done
 exec java $OPENS \
   --add-modules jdk.incubator.vector \
-  -Dspark.ui.enabled=false \
-  -Dspark.sql.session.timeZone=UTC \
-  -Dspark.sql.artifact.isolation.enabled=false \
   -Xmx"${SPARK_DRIVER_MEM:-24g}" \
   -cp "$CLASSES:/opt/spark/jars/*" \
   "$MAIN" "$@"
