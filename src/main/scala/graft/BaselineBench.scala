@@ -145,9 +145,10 @@ object BaselineBench {
     }
     out("insert_append_ops_per_s") = 1000.0 / (appendMs / 1000.0)
 
-    // ---- upsert: REST-path union + localCheckpoint ---------------------
+    // ---- upsert: union + localCheckpoint -------------------------------
     // replace ids 0..999 with the incoming 1000-row batch, then
-    // materialize the checkpointed collection (what RestApi.insert does)
+    // materialize the checkpointed collection (the shape of a RestApi
+    // compaction)
     val upsertMs = best(math.max(1, runs - 1)) {
       df.filter(col("id") >= 1000L).unionByName(incoming)
         .localCheckpoint(false).count()

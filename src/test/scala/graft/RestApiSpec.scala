@@ -412,6 +412,225 @@ class RestApiSpec extends SparkSpec {
     }
   }
 
+  /** Longest dependency chain below `rdd`, walked level by level so a
+    * deep lineage cannot overflow the walk itself.
+    */
+  private def lineageDepth(rdd: org.apache.spark.rdd.RDD[_]): Int = {
+    var level: Seq[org.apache.spark.rdd.RDD[_]] = Seq(rdd)
+    var depth = 0
+    while (level.nonEmpty) {
+      depth += 1
+      level = level.flatMap(_.dependencies.map(_.rdd))
+        .groupBy(_.id).values.map(_.head).toSeq
+    }
+    depth
+  }
+
+  private def upsertBody(rows: Seq[(String, Seq[Float])]): String =
+    rows.map { case (id, v) =>
+      s"""{"id":"$id","vector":[${v.mkString(",")}]}"""
+    }.mkString("""{"vectors":[""", ",", "]}")
+
+  test("150 upsert-batch calls between ANN reads keep the lineage bounded " +
+      "and the collection exact") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val a = new RestApi(spark)
+    def vec(i: Int): Seq[Float] =
+      (0 until 8).map(d => math.sin(i * 0.37 + d).toFloat)
+    var rows = (0 until 200).map(i => s"r$i" -> vec(i)).toMap
+    a.register("c", rows.toSeq.toDF("id", "vector")
+      .repartition(2, col("id")), dims = 8)
+    assert(a.handle("POST", "/collections/c/index",
+      """{"num_cells":4}""")._1 == 200)
+    var next = 200
+    def write(): Unit = { // eight new ids: 16 delta entries
+      val batch = (next until next + 8).map(i => s"n$i" -> vec(i))
+      next += 8
+      val (s, out) = a.handle("POST",
+        "/collections/c/vectors/upsert-batch", upsertBody(batch))
+      assert(s == 200, out)
+      rows ++= batch
+    }
+    val annRead = s"""{"vector":[${vec(3).mkString(",")}],"k":5,"mode":"ann"}"""
+    def exactTop(q: Seq[Float]): Seq[String] = {
+      val (s, out) = a.handle("POST", "/collections/c/search",
+        s"""{"vector":[${q.mkString(",")}],"k":10}""")
+      assert(s == 200, out)
+      val rs = mapper.readTree(out).get("results")
+      (0 until rs.size()).map(i => rs.get(i).get("id").asText())
+    }
+    // the first write marks the registered base, the first exact read
+    // pins it: from here on every base is a materialized checkpoint
+    write()
+    exactTop(vec(0))
+    val sc = spark.sparkContext
+    val group = "rest-lineage-" + System.nanoTime()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val p = Option(e.properties)
+        jobs.add((p.map(_.getProperty("spark.jobGroup.id")).orNull,
+          p.map(_.getProperty("spark.job.description")).orNull)); ()
+      }
+    }
+    sc.addSparkListener(listener)
+    var depth10 = -1
+    try {
+      sc.setJobGroup(group, "lineage regression")
+      (1 to 150).foreach { w =>
+        write()
+        val (s, out) = a.handle("POST", "/collections/c/search", annRead)
+        assert(s == 200, out)
+        if (w == 10) depth10 = lineageDepth(a.collectionFrame("c").rdd)
+      }
+      // a marker job flushes the listener bus up to this point
+      sc.setJobDescription("marker")
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!jobs.toArray.exists(_ == ((group, "marker"))) &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.clearJobGroup(); sc.setJobDescription(null)
+    }
+    val (gs, got) = a.handle("GET", "/collections/c", "")
+    assert(gs == 200, got)
+    assert(mapper.readTree(got).get("count").asLong() == rows.size.toLong)
+    def cosine(x: Seq[Float], y: Seq[Float]): Double = {
+      val dot = x.zip(y).map { case (p, q) => p.toDouble * q }.sum
+      def norm(z: Seq[Float]) = math.sqrt(z.map(f => f.toDouble * f).sum)
+      1 - dot / (norm(x) * norm(y))
+    }
+    Seq(vec(5), vec(777), vec(1300)).foreach { q =>
+      val brute = rows.toSeq.map { case (id, v) => (cosine(q, v), id) }
+        .sorted.take(10).map(_._2)
+      assert(exactTop(q).toSet == brute.toSet, s"query $q")
+    }
+    val loopJobs = jobs.toArray.toSeq.map(_.asInstanceOf[(String, String)])
+      .filter(_._1 == group).map(_._2).takeWhile(_ != "marker")
+    // entries after the pinning write, then 16 per write
+    var size = 16
+    val compactions = (1 to 150).count { _ =>
+      size += 16
+      val crossed = size > RestApi.DeltaBound
+      if (crossed) size = 0
+      crossed
+    }
+    assert(compactions >= 2, s"$compactions compactions")
+    assert(loopJobs.nonEmpty &&
+      loopJobs.forall(_ == "RestApi compaction of c"),
+      s"writes and ANN reads scheduled jobs: $loopJobs")
+    assert(loopJobs.size == compactions, loopJobs)
+    val depth150 = lineageDepth(a.collectionFrame("c").rdd)
+    assert(depth150 == depth10, s"lineage depth $depth10 → $depth150")
+  }
+
+  test("delete-batch with a repeated id deletes and un-indexes it once") {
+    val a = api
+    (0 until 6).foreach(i => insert(a, s"v$i", Seq(i + 1.0, 1, 0)))
+    assert(a.handle("POST", "/collections/docs/index",
+      """{"num_cells":2}""")._1 == 200)
+    def indexRows = mapper.readTree(
+      a.handle("GET", "/collections/docs/index", "")._2).get("rows").asLong()
+    assert(indexRows == 6L)
+    val (s, out) = a.handle("POST", "/collections/docs/vectors/delete-batch",
+      """{"ids":["v2","v2"]}""")
+    assert(s == 200, out)
+    assert(mapper.readTree(out).get("deleted").asLong() == 1L)
+    assert(indexRows == 5L)
+    val (_, info) = a.handle("GET", "/collections/docs", "")
+    assert(mapper.readTree(info).get("count").asLong() == 5L)
+  }
+
+  test("write counts stay exact on every membership path and across a " +
+      "compaction") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    def vec(i: Int): Seq[Float] =
+      Seq((i % 7 + 1).toFloat, (i % 5).toFloat, (i % 3 - 1).toFloat)
+    def check(a: RestApi, c: String, special: Seq[String] = Nil): Unit = {
+      // brute force over the frame: every write's reported count is the
+      // change in these ids, and GET counts them
+      def ids = a.collectionFrame(c).select("id").collect()
+        .map(_.getString(0)).toSeq
+      def getCount = mapper.readTree(
+        a.handle("GET", s"/collections/$c", "")._2).get("count").asLong()
+      def multiset(xs: Seq[String]) = xs.groupBy(identity).map {
+        case (k, v) => k -> v.size
+      }
+      def upsert(route: String, batch: Seq[(String, Seq[Float])]): Unit = {
+        val before = ids
+        val clash = route == "batch" && batch.exists(b => before.contains(b._1))
+        val (s, out) = a.handle("POST", s"/collections/$c/vectors/$route",
+          upsertBody(batch))
+        val after = ids
+        if (clash) {
+          assert(s == 409, out)
+          assert(multiset(after) == multiset(before), "409 wrote nothing")
+        } else {
+          assert(s == 200, out)
+          val key = if (route == "batch") "inserted" else "upserted"
+          val distinct = batch.map(_._1).distinct
+          assert(mapper.readTree(out).get(key).asLong() == distinct.size)
+          assert(multiset(after) ==
+            multiset(before.filterNot(distinct.toSet) ++ distinct))
+        }
+        assert(getCount == after.size, s"$route $batch")
+      }
+      def delete(del: Seq[String]): Unit = {
+        val before = ids
+        val (s, out) = a.handle("POST",
+          s"/collections/$c/vectors/delete-batch",
+          s"""{"ids":[${del.map(i => s""""$i"""").mkString(",")}]}""")
+        assert(s == 200, out)
+        val after = ids
+        assert(mapper.readTree(out).get("deleted").asLong() ==
+          before.count(del.toSet), s"delete $del")
+        assert(multiset(after) == multiset(before.filterNot(del.toSet)))
+        assert(getCount == after.size, s"delete $del")
+      }
+      if (special.nonEmpty) delete(special ++ special)
+      val present = ids.head
+      upsert("upsert-batch", Seq("d1" -> vec(1), "d1" -> vec(2),
+        present -> vec(3)))                       // repeated + replaced id
+      upsert("batch", Seq("d2" -> vec(4), present -> vec(5))) // clash
+      upsert("batch", Seq("d2" -> vec(4), "d3" -> vec(6)))
+      delete(Seq("d1", "d1", "nope"))             // delta id, repeated, unknown
+      delete(Seq("nope1", "nope2"))
+      delete(Seq(present, "d2", present))
+      // crosses a compaction: 2 · 520 entries > DeltaBound
+      upsert("upsert-batch", (0 until RestApi.DeltaBound / 2 + 8)
+        .map(i => s"big$i" -> vec(i)))
+      upsert("upsert-batch", Seq("big3" -> vec(9), "d3" -> vec(8)))
+      delete(Seq("big0", "big1", "d3", "big0"))
+      upsert("batch", Seq("big2" -> vec(1)))      // clash after compaction
+      upsert("batch", Seq("big0" -> vec(1)))      // deleted id comes back
+    }
+    def registered(extra: Seq[(String, Seq[Float], java.lang.Long)]) = {
+      val a = new RestApi(spark)
+      a.nowEpochS = () => 1700000000L
+      val base = (0 until 30).map(i => (s"r$i", vec(i), null: java.lang.Long))
+      a.register("c", (base ++ extra).toDF("id", "vector", "ttl_expires_at")
+        .repartition(3, col("id")), dims = 3)
+      a
+    }
+    def indexed(a: RestApi): RestApi = {
+      val (s, out) = a.handle("POST", "/collections/c/index",
+        """{"num_cells":2}""")
+      assert(s == 200, out); a
+    }
+    // covering snapshot, then no snapshot
+    check(indexed(registered(Nil)), "c")
+    check(registered(Nil), "c")
+    // snapshots that do not cover the frame: a duplicate id, and a row
+    // whose TTL has already expired (the frame keeps it, the index not)
+    check(indexed(registered(Seq(("r4", vec(40), null)))), "c", Seq("r4"))
+    check(indexed(registered(Seq(("old", vec(41), 1690000000L)))), "c",
+      Seq("old"))
+  }
+
   test("build_index refuses an oversized collection via the CHEAP " +
       "pre-guard, before any ranking/checkpoint work") {
     val a = api
