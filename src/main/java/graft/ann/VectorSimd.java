@@ -203,16 +203,18 @@ public final class VectorSimd {
     return s;
   }
 
-  /** Exact mismatch count — integer semantics, identical to scalar. */
+  /** Count of positions whose zero-ness differs (the dist_hamming
+   * semantics) — integer semantics, identical to scalar. */
   public static int hamming(float[] vs, int off, int dims, float[] q) {
     int i = 0;
     int step = SF.length();
     int c = 0;
     for (; i <= dims - step; i += step)
-      c += FloatVector.fromArray(SF, vs, off + i)
-          .compare(VectorOperators.NE, FloatVector.fromArray(SF, q, i))
+      c += step - FloatVector.fromArray(SF, vs, off + i)
+          .compare(VectorOperators.NE, 0f)
+          .eq(FloatVector.fromArray(SF, q, i).compare(VectorOperators.NE, 0f))
           .trueCount();
-    for (; i < dims; i++) if (vs[off + i] != q[i]) c++;
+    for (; i < dims; i++) if ((vs[off + i] != 0f) != (q[i] != 0f)) c++;
     return c;
   }
 }

@@ -584,8 +584,7 @@ object Ivf {
   /** Mirror of the [[graft.functions.DistanceKernels]] float kernels over
     * a row-major flat array: same double accumulation in the same index
     * order, so scores are bit-identical to [[search]]'s codegen'd distance
-    * expression (AnnSpec asserts row identity for cosine, euclidean, dot
-    * and manhattan).
+    * expression (AnnSpec asserts row identity for every metric).
     */
   private[graft] def flatScoreKernel(metric: String)
       : (Array[Float], Int, Int, Array[Float], Double, Double) => Double =
@@ -638,7 +637,9 @@ object Ivf {
       }
       case "hamming" => (vs, off, dims, q, _, _) => {
         var s = 0.0; var i = 0
-        while (i < dims) { if (vs(off + i) != q(i)) s += 1.0; i += 1 }
+        while (i < dims) {
+          if ((vs(off + i) != 0.0f) != (q(i) != 0.0f)) s += 1.0; i += 1
+        }
         s
       }
       case other => throw new IllegalArgumentException(s"unknown metric $other")

@@ -1,5 +1,6 @@
 package graft.ann
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Driver-local point-query serving — the in-process answer path for the
@@ -18,16 +19,17 @@ import org.apache.spark.sql.functions._
   *     rebuild-on-mutation character (its inserts rebuild HNSW segments).
   *
   * Results are bit-identical to [[Ivf.search]] at the same (k, nprobe):
-  * the same probe algebra ([[Ivf.probeCells]]), the same flat kernels
-  * ([[Ivf.flatScoreKernel]]), the same (distance, id) tie order
-  * (LocalServeSpec asserts equality row by row). With `simd = true` the
+  * the same cells ([[fromRows]] assigns them as [[Ivf.cellOf]] does), the
+  * same probe algebra ([[Ivf.probeCells]]), the same flat kernels
+  * ([[Ivf.flatScoreKernel]]), the same (distance, id) tie order (AnnSpec
+  * asserts equality row by row for every metric). With `simd = true` the
   * f32 [[VectorSimd]] kernel scores instead — recall-contracted rather
   * than bit-identical, like [[Ivf.batchSearchPacked]]'s simd mode.
   */
 object LocalServe {
 
-  /** Driver-memory ceiling for the in-process serving tier; REST index
-    * builds guard against the same bound before their snapshot sort.
+  /** Driver-memory ceiling for the in-process serving tier; a REST index
+    * build collects at most this bound plus one row.
     */
   val DefaultMaxRows: Long = 2000000L
 
@@ -54,60 +56,148 @@ object LocalServe {
       cellIds.iterator.map(_.length.toLong).sum - tombstones.size()
   }
 
-  /** Materialize a driver-local snapshot of an IVF index. One distributed
-    * pass; refuses collections beyond `maxRows` (the driver-memory guard —
-    * this is the small-collection serving tier, not a general path).
+  /** At most `maxRows + 1` rows of `df` from one Spark job: the driver
+    * never holds more than the bound plus one, and more than `maxRows`
+    * rows back means the frame is over it. The job's one task reads the
+    * partitions in turn and stops at the bound, where a bare `limit`
+    * collect schedules a further job each time the partitions read so
+    * far fall short of it.
+    */
+  def collectBounded(df: DataFrame, maxRows: Long): Array[Row] =
+    df.coalesce(1).limit(math.min(maxRows, Int.MaxValue - 1L).toInt + 1)
+      .collect()
+
+  /** Materialize a driver-local snapshot of an IVF index: one bounded
+    * collect of (id, vector[, payload]), cells assigned on the driver by
+    * [[fromRows]]. Refuses collections beyond `maxRows` (the
+    * driver-memory guard — this is the small-collection serving tier,
+    * not a general path).
     */
   def fromIndex(ix: Ivf.Index, idCol: String = "id",
                 vecCol: String = "vector",
                 maxRows: Long = DefaultMaxRows,
                 payloadCol: Option[String] = None): LocalIndex = {
-    val n = ix.assigned.count()
-    require(n <= maxRows,
-      s"LocalServe.fromIndex: $n rows exceeds maxRows=$maxRows — " +
+    val rows = collectBounded(ix.assigned.select(
+      Seq(col(idCol).cast("long"), col(vecCol).cast("array<float>")) ++
+        payloadCol.map(c => col(c).cast("long")): _*), maxRows)
+    require(rows.length <= maxRows,
+      s"LocalServe.fromIndex: more than maxRows=$maxRows rows — " +
         "driver-local serving is for collections that fit on the driver; " +
         "use Ivf.batchSearchPacked for larger ones")
-    val dims = ix.centroids.headOption.map(_.length).getOrElse(0)
-    val numCells = ix.centroids.length
-    val hasPayload = payloadCol.isDefined
-    val payC = payloadCol.map(c => col(c).cast("long")).getOrElse(lit(0L))
-    val rows = ix.assigned
-      .select(col(idCol).cast("long"), col("cell").cast("int"),
-        col(vecCol).cast("array<float>"), payC)
-      .collect()
-    val counts = new Array[Int](numCells)
-    rows.foreach(r => counts(r.getInt(1)) += 1)
-    val ids = Array.tabulate(numCells)(c => new Array[Long](counts(c)))
-    val vecs = Array.tabulate(numCells)(c => new Array[Float](counts(c) * dims))
-    val norms2 = Array.tabulate(numCells)(c =>
-      if (ix.metric == "cosine") new Array[Double](counts(c))
-      else Array.emptyDoubleArray)
-    val payload = Array.tabulate(numCells)(c =>
-      if (hasPayload) new Array[Long](counts(c)) else Array.emptyLongArray)
-    val fill = new Array[Int](numCells)
-    rows.foreach { r =>
-      val cell = r.getInt(1)
-      val i = fill(cell); fill(cell) = i + 1
-      ids(cell)(i) = r.getLong(0)
-      val v = r.getSeq[Float](2)
-      var j = 0; val off = i * dims
-      var s = 0.0
-      while (j < dims) {
-        val x = v(j)
-        vecs(cell)(off + j) = x
-        s += x.toDouble * x.toDouble
-        j += 1
+    fromRows(ix.centroids, ix.metric, rows.map(_.getLong(0)),
+      rows.map(vectorAt(_, 1)),
+      if (payloadCol.isDefined) rows.map(_.getLong(2)) else null)
+  }
+
+  /** A row's vector column as a primitive array; null is refused. */
+  private[graft] def vectorAt(r: Row, i: Int): Array[Float] = {
+    require(!r.isNullAt(i), "LocalServe: a row has a null vector")
+    r.getSeq[Float](i).toArray
+  }
+
+  /** Fit `numCells` centroids on the driver ([[Ivf.localKMeans]]) and
+    * assemble the snapshot of rows already there. At most `maxTrainRows`
+    * rows train: all of them in input order when they fit (the set and
+    * order [[Ivf.boundedSample]] yields for the same scan), otherwise a
+    * seeded sample drawn over the rows in id order, so it does not depend
+    * on how the input was partitioned.
+    */
+  def build(ids: Array[Long], vecs: Array[Array[Float]], numCells: Int,
+            metric: String, seed: Long = 42L, maxIter: Int = 20,
+            maxTrainRows: Int = 100000): LocalIndex = {
+    val train =
+      if (vecs.length <= maxTrainRows) vecs
+      else {
+        val byId = Array.range(0, ids.length).sortBy(ids(_))
+        // partial Fisher-Yates: the first maxTrainRows slots end up a
+        // uniform sample of the id-ordered positions
+        val pos = Array.range(0, ids.length)
+        val rnd = new scala.util.Random(seed)
+        var i = 0
+        while (i < maxTrainRows) {
+          val j = i + rnd.nextInt(pos.length - i)
+          val t = pos(i); pos(i) = pos(j); pos(j) = t
+          i += 1
+        }
+        pos.take(maxTrainRows).sorted.map(p => vecs(byId(p)))
       }
-      if (ix.metric == "cosine") norms2(cell)(i) = s
-      if (hasPayload) payload(cell)(i) = r.getLong(3)
+    fromRows(Ivf.localKMeans(train, numCells, maxIter, seed), metric, ids,
+      vecs)
+  }
+
+  /** The cell of a vector's nearest centroid, given the vector and its
+    * squared norm (read by cosine only), under the metric's flat kernel:
+    * the lowest cell among equal distances and NaN last, the choice
+    * [[Ivf.cellOf]]'s `array_min` over (distance, cell) makes.
+    */
+  private def nearestCell(centroids: Array[Array[Float]],
+                          metric: String): (Array[Float], Double) => Int = {
+    val score = Ivf.flatScoreKernel(metric)
+    val norms2 = centroids.map(Ivf.norm2)
+    (v, vn2) => {
+      var best = 0
+      var bestD = score(v, 0, v.length, centroids(0), vn2, norms2(0))
+      var c = 1
+      while (c < centroids.length) {
+        val d = score(v, 0, v.length, centroids(c), vn2, norms2(c))
+        if (d < bestD || bestD.isNaN && !d.isNaN) { best = c; bestD = d }
+        c += 1
+      }
+      best
     }
-    new LocalIndex(ix.centroids, ix.metric, dims, ids, vecs, norms2, payload)
+  }
+
+  /** The one constructor of a [[LocalIndex]]. Each row joins the cell of
+    * its nearest centroid under the metric's flat kernel
+    * ([[Ivf.flatScoreKernel]], the mirror of the `dist_*` kernels), as
+    * [[Ivf.cellOf]] assigns it. Each cell keeps its rows in input order.
+    * `payload` is null for an index without a filter attribute.
+    */
+  def fromRows(centroids: Array[Array[Float]], metric: String,
+               ids: Array[Long], vecs: Array[Array[Float]],
+               payload: Array[Long] = null): LocalIndex = {
+    val dims = centroids.headOption.map(_.length).getOrElse(0)
+    val numCells = centroids.length
+    val n = ids.length
+    require(vecs.length == n && (payload == null || payload.length == n),
+      "LocalServe.fromRows: ids, vectors and payload differ in length")
+    require(vecs.forall(_.length == dims),
+      s"LocalServe.fromRows: vector dims must equal centroid dims $dims")
+    val cosine = metric == "cosine"
+    val rowNorms2 = if (cosine) vecs.map(Ivf.norm2) else null
+    val nearest = nearestCell(centroids, metric)
+    val cellOf = new Array[Int](n)
+    java.util.stream.IntStream.range(0, n).parallel().forEach { row =>
+      cellOf(row) = nearest(vecs(row), if (cosine) rowNorms2(row) else 0.0)
+    }
+    val counts = new Array[Int](numCells)
+    cellOf.foreach(c => counts(c) += 1)
+    val cellIds = Array.tabulate(numCells)(c => new Array[Long](counts(c)))
+    val cellVecs = Array.tabulate(numCells)(c => new Array[Float](counts(c) * dims))
+    val cellNorms2 = Array.tabulate(numCells)(c =>
+      if (cosine) new Array[Double](counts(c)) else Array.emptyDoubleArray)
+    val cellPayload = Array.tabulate(numCells)(c =>
+      if (payload != null) new Array[Long](counts(c)) else Array.emptyLongArray)
+    val fill = new Array[Int](numCells)
+    var r = 0
+    while (r < n) {
+      val c = cellOf(r)
+      val i = fill(c); fill(c) = i + 1
+      cellIds(c)(i) = ids(r)
+      System.arraycopy(vecs(r), 0, cellVecs(c), i * dims, dims)
+      if (cosine) cellNorms2(c)(i) = rowNorms2(r)
+      if (payload != null) cellPayload(c)(i) = payload(r)
+      r += 1
+    }
+    new LocalIndex(centroids, metric, dims, cellIds, cellVecs, cellNorms2,
+      cellPayload)
   }
 
   /** Incremental insert — the serve-under-writes path (the reference's
     * in-memory index takes inserts without a rebuild; this is the same
     * contract for the snapshot tier). Each vector lands in its nearest
-    * centroid's cell; every touched cell's arrays are copied ONCE per
+    * centroid's cell, chosen as [[fromRows]] chooses it; every touched
+    * cell's arrays are copied ONCE per
     * batch (grouped), untouched cells are shared, so the returned index
     * is safe to publish while searches run against the old one. This
     * appends blindly, exactly like the engine's insert (dedup is the
@@ -134,8 +224,9 @@ object LocalServe {
     // (an EMPTY payload-built index is indistinguishable from a
     // non-payload one — build the payload snapshot from non-empty data)
     val hasPayload = li.cellPayload.exists(_.nonEmpty)
+    val nearest = nearestCell(li.centroids, li.metric)
     val byCell = rows.groupBy { case (_, v, _) =>
-      Ivf.probeCells(li.centroids, li.metric, v, 1).head
+      nearest(v, if (li.metric == "cosine") Ivf.norm2(v) else 0.0)
     }
     val ids = li.cellIds.clone()
     val vecs = li.cellVecs.clone()

@@ -17,11 +17,11 @@ import org.apache.spark.sql.DataFrame
   * oversized frame is rejected at plan time with zero runtime cost — no
   * count job, which would recompute the caller's search. Statically
   * unbounded inputs (e.g. a raw scan) fall back to the documented
-  * contract. Since r14 the batch entry points (CF fit's dense-id
-  * numbering, REST buildIndex's surrogate ids) rank through
-  * `DistributedRank.rankedByRange` and need no window bound at all;
-  * buildIndex's remaining count guard enforces `LocalServe`'s driver
-  * memory budget, not a numbering ceiling. WindowLintSpec pins the
+  * contract. The batch entry points need no window bound at all: CF
+  * fit's dense-id numbering ranks through `DistributedRank.rankedByRange`,
+  * and REST buildIndex numbers its surrogate ids on the driver over rows
+  * that `LocalServe.collectBounded` already held to the driver memory
+  * budget. WindowLintSpec pins the
   * complete allowlist of remaining unpartitioned-window sites.
   */
 private[graft] object Guards {

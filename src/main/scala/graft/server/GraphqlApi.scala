@@ -237,21 +237,25 @@ final class GraphqlApi(api: RestApi, version: String = "0.1.0") {
     o.put("vectorCount", count).put("isEmpty", count == 0L)
   }
 
-  /** The store keeps lowercase metric names; the reference Debug-formats
+  /** The store keeps canonical metric names; the reference Debug-formats
     * its DistanceFunction enum into this field (graphql_api.rs:197-218
     * over distance.rs:43-73), so reads render the enum spelling —
     * matching createCollection's "Cosine" echo.
     */
-  private def enumMetric(metric: String): String = metric match {
-    case "cosine"                                          => "Cosine"
-    case "cosine_normalized"                               => "CosineNormalized"
-    case "euclidean" | "l2"                                => "Euclidean"
-    case "dot" | "dot_product" | "inner" | "inner_product" => "DotProduct"
-    case "manhattan" | "l1" | "taxicab"                    => "Manhattan"
-    case "hamming"                                         => "Hamming"
-    case "chebyshev"                                       => "Chebyshev"
-    case other                                             => other.capitalize
-  }
+  private val enumNames = Map("cosine" -> "Cosine",
+    "cosine_normalized" -> "CosineNormalized", "euclidean" -> "Euclidean",
+    "dot" -> "DotProduct", "manhattan" -> "Manhattan",
+    "hamming" -> "Hamming", "chebyshev" -> "Chebyshev")
+
+  private def enumMetric(metric: String): String =
+    enumNames.getOrElse(metric, metric.capitalize)
+
+  /** The store name of an enum spelling ("DotProduct" → "dot"); other
+    * spellings pass through for the store to parse.
+    */
+  private def storeMetric(spelling: String): String =
+    enumNames.collectFirst { case (m, e) if e == spelling => m }
+      .getOrElse(spelling)
 
   private def qCollections(): ArrayNode = {
     import scala.jdk.CollectionConverters._
@@ -345,7 +349,7 @@ final class GraphqlApi(api: RestApi, version: String = "0.1.0") {
       .filterNot(_.isNull).map(_.asText())
     val body = mapper.createObjectNode()
     body.put("name", name).put("dimensions", dims)
-    distance.foreach(body.put("distance", _))
+    distance.foreach(d => body.put("distance", storeMetric(d)))
     rest("POST", "/collections", mapper.writeValueAsString(body))
     // reference echo: requested distance or "Cosine", count 0, empty
     val o = mapper.createObjectNode()

@@ -9,9 +9,10 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.filter.{Filter, FilterCompiler}
-import graft.functions.Distances
+import graft.functions.Metric
 import graft.ops.Search
 
 /** REST contract layer (SURVEY §3.2 scoped it out of core; built as the
@@ -71,9 +72,10 @@ class RestApi(spark: SparkSession) {
     * `localCheckpoint`, so the first Spark read after it pins one copy.
     * `maxPartitions` is max(partitions at creation, defaultParallelism):
     * the frame coalesces back to it, so the partition count (and every
-    * scan's task count) stays bounded. The delta is guarded by the
-    * registry lock; [[df]], [[deleted]] and [[ann]] are safe to read
-    * without it.
+    * scan's task count) stays bounded. `metric` is the canonical
+    * `Metric` name, whatever spelling created the collection. The delta
+    * is guarded by the registry lock; [[df]], [[deleted]] and [[ann]] are
+    * safe to read without it.
     */
   final class Coll(@volatile var name: String, val dims: Int,
                    val metric: String, registered: DataFrame,
@@ -174,9 +176,9 @@ class RestApi(spark: SparkSession) {
     * one row each: no write landed between the build's snapshot and its
     * publish, the ids are distinct and no expired-TTL row was left out.
     * Writes keep it (they change the snapshot and the frame alike), so
-    * delete counts and insert clashes are answered from `idToSid` on the
-    * driver. A TTL write or `DELETE /index` drops the snapshot, and with
-    * it the coverage.
+    * delete counts and insert clashes are answered from `idToSid`, and
+    * collection counts from `rows`, on the driver. A TTL write or
+    * `DELETE /index` drops the snapshot, and with it the coverage.
     */
   final case class AnnState(li: graft.ann.LocalServe.LocalIndex,
                             ids: Array[String], numCells: Int,
@@ -234,6 +236,7 @@ class RestApi(spark: SparkSession) {
     */
   def register(name: String, df: DataFrame, dims: Int,
                metric: String = "cosine"): Unit = synchronized {
+    val canonical = Metric.parse(metric).name
     val frame = df.select(
       col("id").cast("string").as("id"),
       col("vector").cast("array<float>").as("vector"),
@@ -241,12 +244,13 @@ class RestApi(spark: SparkSession) {
        else lit(null).cast("string")).as("metadata"),
       (if (df.columns.contains("ttl_expires_at")) col("ttl_expires_at").cast("long")
        else lit(null).cast("long")).as("ttl_expires_at"))
-    collections(name) = new Coll(name, dims, metric, frame,
+    collections(name) = new Coll(name, dims, canonical, frame,
       math.max(frame.rdd.getNumPartitions, spark.sparkContext.defaultParallelism),
       baseMarked = false)
   }
 
-  /** The configured distance metric of a collection (None when absent).
+  /** The configured distance metric of a collection, as its canonical
+    * `Metric` name (None when absent).
     * The REST CollectionInfo deliberately omits it (reference types.rs
     * parity); front-ends that need it (GraphQL's distanceFunction field)
     * read it here instead of widening the REST contract.
@@ -324,7 +328,7 @@ class RestApi(spark: SparkSession) {
         page.foreach { c =>
           val e = a.addObject()
           e.put("name", c.name).put("dimensions", c.dims)
-          e.put("count", c.df.count()).put("deleted_count", c.deleted)
+          e.put("count", count(c)).put("deleted_count", c.deleted)
         }
         val p = o.putObject("pagination")
         p.put("count", page.size).put("offset", offset).put("total", all.size)
@@ -344,7 +348,8 @@ class RestApi(spark: SparkSession) {
     if (collections.contains(name))
       throw ApiException(409, s"Collection already exists: $name",
         "ALREADY_EXISTS")
-    val metric = Option(req.get("distance")).map(_.asText()).getOrElse("cosine")
+    val metric = canonicalMetric(
+      Option(req.get("distance")).map(_.asText()).getOrElse("cosine"))
     collections(name) = new Coll(name, dims, metric,
       spark.createDataFrame(java.util.Collections.emptyList[Row](), schema),
       spark.sparkContext.defaultParallelism, baseMarked = true)
@@ -354,6 +359,9 @@ class RestApi(spark: SparkSession) {
   /** A collection's current frame (its rows and partition layout). */
   private[graft] def collectionFrame(name: String): DataFrame = coll(name).df
 
+  /** A collection's published ANN state (null when none is built). */
+  private[graft] def annState(name: String): AnnState = coll(name).ann
+
   private def coll(name: String): Coll = synchronized {
     collections.getOrElse(name,
       throw ApiException(404, s"Collection not found: $name", "NOT_FOUND"))
@@ -361,13 +369,21 @@ class RestApi(spark: SparkSession) {
 
   private def getCollection(name: String): (Int, String) = {
     val c = coll(name)
-    val n = c.df.count()
+    val n = count(c)
     ok(obj { o =>
       o.put("name", name).put("dimensions", c.dims).put("count", n)
       o.put("deleted_count", c.deleted)
       // reference needs_compaction(0.2) (handlers/collections.rs:127)
       o.put("needs_compaction", c.deleted.toDouble > 0.2 * math.max(1L, n + c.deleted))
     })
+  }
+
+  /** The frame's row count: a covering ANN snapshot holds it on the
+    * driver, otherwise one Spark count.
+    */
+  private def count(c: Coll): Long = {
+    val a = c.ann
+    if (a != null && a.covers) a.rows else c.df.count()
   }
 
   private def deleteCollection(name: String): (Int, String) = synchronized {
@@ -517,23 +533,24 @@ class RestApi(spark: SparkSession) {
 
   private def liveRows(c: Coll): DataFrame = live(c.df)
 
-  private def live(frame: DataFrame): DataFrame =
-    frame.filter(col("ttl_expires_at").isNull ||
-      col("ttl_expires_at") > nowEpochS())
+  private def live(frame: DataFrame, now: Long = nowEpochS()): DataFrame =
+    frame.filter(col("ttl_expires_at").isNull || col("ttl_expires_at") > now)
 
   /** Build the driver-resident ANN serving tier over the collection's
-    * live snapshot: assign a dense surrogate id (string ids must become
-    * longs for the packed arrays — the single-partition window is a
-    * one-off build pass over a registry-sized, `maxRows`-guarded
-    * collection), fit IVF centroids, collect into a LocalServe snapshot.
-    * After this, `{"mode":"ann"}` searches answer in-process with zero
-    * Spark jobs — the reference's in-memory serving model.
+    * live rows with one Spark job: a bounded collect of (id, vector, ttl)
+    * from the pinned frame, everything else on the driver. Surrogate ids
+    * (string ids must become longs for the packed arrays) follow the id
+    * order under `UTF8String` comparison, stable over scan order;
+    * `LocalServe.build` fits the IVF centroids on the live rows and
+    * assigns each row its cell. After this, `{"mode":"ann"}` searches
+    * answer in-process with zero Spark jobs — the reference's in-memory
+    * serving model.
     *
     * `maxRows` exists as a parameter (route calls always pass the 2M
     * default) solely so the refusal branch is executable in-suite —
-    * RestApiSpec pins that the CHEAP pre-guard fires (its "collection
-    * exceeds" message, distinct from the post-checkpoint guard's
-    * "N rows exceeds") before any ranking/checkpoint work.
+    * RestApiSpec pins that a collection over the bound is refused with
+    * its "collection exceeds" message after at most `maxRows + 1` rows
+    * reached the driver.
     */
   private[graft] def buildIndex(name: String, body: String,
       maxRows: Long = graft.ann.LocalServe.DefaultMaxRows)
@@ -544,63 +561,45 @@ class RestApi(spark: SparkSession) {
     val numCells = boundedInt(req, "num_cells", default = 16, max = 4096)
     val nprobe = boundedInt(req, "nprobe",
       default = math.max(1, numCells / 4), max = numCells)
-    // Dense surrogate ids via the distributed global rank — same
-    // id-ordered assignment the former Window.orderBy produced, with no
-    // single-partition sort — checkpointed ONCE: the eager checkpoint
-    // pins one set of live rows, so the guard's count below and the data
-    // every later stage reads are the same rows (no TOCTOU window
-    // against concurrent upserts; rows written after this point simply
-    // aren't in the index — the documented serve-under-writes behavior).
-    // rankedByRange's internal pin is explicitly released; only this one
-    // snapshot remains, with the same lifecycle the pre-r14 snapshot
-    // had.
-    // Cheap pre-guard BEFORE any ranking/checkpoint work: a limit(N+1)
-    // count costs one narrow scan and refuses an oversized collection
-    // without materializing it (pre-r14 protective behavior restored —
-    // without this, a single misuse REST call would rank + eagerly
-    // checkpoint the whole corpus before the 4xx). The post-checkpoint
-    // count below stays the authoritative race-free bound.
-    // limit() takes an Int: clamp a Long maxRows at or above Int.MaxValue
-    // instead of letting .toInt overflow into a tiny/negative limit.
-    // The guard counts all rows first: at or under the bound that count
-    // is also the frame's full count, which decides below whether the
-    // snapshot covers the frame; over it, the live rows decide.
+    // One pinned frame, one bounded collect: at or under the bound the
+    // collected rows are the whole frame, so their number decides below
+    // whether the snapshot covers it, and the live ones are kept here
+    // with live()'s test. Over it, the live rows alone may still fit,
+    // which costs one more bounded collect. Rows written after the pin
+    // are not in the index — the documented serve-under-writes behavior.
     val (frame, version) = synchronized((c.df, c.version))
-    val cap = math.min(maxRows, Int.MaxValue - 1L).toInt + 1
-    val full = frame.limit(cap).count()
-    val preCount = if (full <= maxRows) full else live(frame).limit(cap).count()
-    Predef.require(preCount <= maxRows,
+    val now = nowEpochS()
+    val cols = frame.select(col("id"), col("vector"), col("ttl_expires_at"))
+    val all = graft.ann.LocalServe.collectBounded(cols, maxRows)
+    val rows =
+      if (all.length <= maxRows)
+        all.filter(r => r.isNullAt(2) || r.getLong(2) > now)
+      else graft.ann.LocalServe.collectBounded(live(cols, now), maxRows)
+    Predef.require(rows.length <= maxRows,
       s"build_index('$name'): collection exceeds the in-process serving " +
         s"bound ($maxRows); use Ivf.batchSearchPacked for collections " +
         "this large")
-    val snap = {
-      val (ranked, release) = graft.ops.DistributedRank.rankedByRange(
-        live(frame).select(col("id"), col("vector")),
-        Nil, Seq(col("id")), "__r", "__n")
-      try ranked.withColumn("__sid", col("__r").cast("long"))
-        .drop("__r", "__n")
-        .localCheckpoint(true) // one stable snapshot feeds guard + build + mapping
-      finally release()
+    val n = rows.length
+    val keys = rows.map(r => UTF8String.fromString(r.getString(0)))
+    val bySid = Array.range(0, n).sortWith { (x, y) =>
+      val (a, b) = (keys(x), keys(y))
+      if (a == null) b != null else b != null && a.compareTo(b) < 0
     }
-    val nLive = snap.count() // counts checkpointed blocks — no rescan
-    Predef.require(nLive <= maxRows,
-      s"build_index('$name'): $nLive rows exceeds the in-process serving " +
-        s"bound ($maxRows); use " +
-        "Ivf.batchSearchPacked for collections this large")
-    val ix = graft.ann.Ivf.build(snap, col("vector"), numCells, c.metric)
-    val li = graft.ann.LocalServe.fromIndex(ix, "__sid", "vector")
-    val ids = snap.orderBy(col("__sid")).select("id").collect()
-      .map(_.getString(0))
+    val sids = new Array[Long](n)
+    val ids = new Array[String](n)
+    bySid.indices.foreach { sid =>
+      sids(bySid(sid)) = sid; ids(sid) = rows(bySid(sid)).getString(0)
+    }
+    val li = graft.ann.LocalServe.build(sids,
+      rows.map(graft.ann.LocalServe.vectorAt(_, 1)), numCells, c.metric)
     synchronized {
-      val map = new java.util.HashMap[String, Integer](ids.length * 2)
+      val map = new java.util.HashMap[String, Integer](n * 2)
       ids.zipWithIndex.foreach { case (id, sid) => map.put(id, Int.box(sid)) }
-      val covers = c.version == version && full == ids.length &&
-        map.size == ids.length
-      c.ann = AnnState(li, ids, numCells, nprobe, ids.length.toLong, map,
-        covers)
+      val covers = c.version == version && all.length == n && map.size == n
+      c.ann = AnnState(li, ids, numCells, nprobe, n.toLong, map, covers)
     }
     ok(obj { o =>
-      o.put("indexed", ids.length); o.put("num_cells", numCells)
+      o.put("indexed", n); o.put("num_cells", numCells)
       o.put("nprobe", nprobe)
     })
   }
@@ -638,7 +637,7 @@ class RestApi(spark: SparkSession) {
     val nprobe = boundedInt(req, "nprobe", default = ann.nprobe,
       max = ann.numCells)
     if (Option(req.get("distance")).filterNot(_.isNull)
-        .exists(_.asText() != c.metric))
+        .exists(d => canonicalMetric(d.asText()) != c.metric))
       throw ApiException(400,
         s"ann mode serves the index metric '${c.metric}'",
         "INVALID_DISTANCE")
@@ -887,6 +886,16 @@ class RestApi(spark: SparkSession) {
   private def ok(json: String): (Int, String) = (200, json)
   private def err(status: Int, msg: String, code: String): (Int, String) =
     (status, obj { o => o.put("error", msg); o.put("code", code) })
+
+  /** A metric spelling's canonical name (`l2` → `euclidean`); a 400 for
+    * a name no metric answers to.
+    */
+  private def canonicalMetric(spelling: String): String =
+    try Metric.parse(spelling).name
+    catch {
+      case e: IllegalArgumentException =>
+        throw ApiException(400, e.getMessage, "INVALID_DISTANCE")
+    }
 
   /** Read an optional positive int, rejecting non-positive values with a
     * 400 (reference guard: k/limit must be >= 1) and capping the top end.

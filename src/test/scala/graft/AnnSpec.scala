@@ -15,6 +15,16 @@ class AnnSpec extends SparkSpec {
   private lazy val query: Array[Float] = emb.filter(col("vec_id") === 0)
     .select("embedding").collect()(0).getSeq[Float](0).toArray
 
+  /** Every metric, and the frame each is checked on: hamming counts
+    * zero-ness flips, which dense embeddings never have, so it runs on
+    * the embeddings with negative components zeroed.
+    */
+  private val metrics = graft.functions.Metric.all.map(_.name)
+  private def embFor(metric: String) =
+    if (metric != "hamming") emb
+    else emb.withColumn("embedding",
+      transform(col("embedding"), x => greatest(x, lit(0f))))
+
   private def exactTopK(k: Int) =
     emb.withColumn("distance",
         round(Distances.cosine(col("embedding"), lit(query)), 6))
@@ -45,12 +55,12 @@ class AnnSpec extends SparkSpec {
   }
 
   test("ivf batchSearchPacked is row-identical to per-query Ivf.search") {
-    val queries = emb.filter(col("vec_id") < 5).orderBy("vec_id")
-      .select("embedding").collect()
-      .map(_.getSeq[Float](0).toArray).zipWithIndex.map(_.swap).toSeq
-    for (metric <- Seq("cosine", "euclidean", "dot", "manhattan");
-         nprobe <- Seq(2, 8)) {
-      val ix = Ivf.build(emb, col("embedding"), numCells = 8, metric)
+    for (metric <- metrics; nprobe <- Seq(2, 8)) {
+      val data = embFor(metric)
+      val queries = data.filter(col("vec_id") < 5).orderBy("vec_id")
+        .select("embedding").collect()
+        .map(_.getSeq[Float](0).toArray).zipWithIndex.map(_.swap).toSeq
+      val ix = Ivf.build(data, col("embedding"), numCells = 8, metric)
       val px = Ivf.pack(ix, "vec_id", "embedding")
       def rows(df: org.apache.spark.sql.DataFrame) = df
         .select(col("query_id"), col("vec_id").cast("long"), col("distance"))
@@ -96,14 +106,17 @@ class AnnSpec extends SparkSpec {
 
   test("LocalServe.search equals Ivf.search row for row") {
     import graft.ann.LocalServe
-    for (metric <- Seq("cosine", "euclidean")) {
-      val ix = Ivf.build(emb, col("embedding"), numCells = 8, metric)
+    for (metric <- metrics) {
+      val data = embFor(metric)
+      val q = data.filter(col("vec_id") === 0)
+        .select("embedding").collect()(0).getSeq[Float](0).toArray
+      val ix = Ivf.build(data, col("embedding"), numCells = 8, metric)
       val li = LocalServe.fromIndex(ix, "vec_id", "embedding")
       Seq(2, 8).foreach { nprobe =>
-        val dist = Ivf.search(ix, query, 10, nprobe, "vec_id", "embedding")
+        val dist = Ivf.search(ix, q, 10, nprobe, "vec_id", "embedding")
           .select(col("vec_id").cast("long"), col("distance"))
           .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-        val local = LocalServe.search(li, query, 10, nprobe).toSeq
+        val local = LocalServe.search(li, q, 10, nprobe).toSeq
         assert(local == dist, s"metric=$metric nprobe=$nprobe")
       }
     }
@@ -368,6 +381,26 @@ class IvfStorageSpec extends SparkSpec {
           s"metric=$metric row=$i scalar=$s simd=$f")
       }
     }
+    // hamming counts positions whose zero-ness differs, as dist_hamming
+    // does: over vectors with zeros (and a -0.0) both flat kernels equal
+    // DistanceKernels.hamming
+    val sparse = vs.map(x => if (x < 0f) 0f else x)
+    sparse(3) = -0.0f
+    val sq = q.map(x => if (x < 0.1f) 0f else x)
+    def arr(xs: Array[Float]) =
+      org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+        .fromPrimitiveArray(xs)
+    val hams = (0 until 16).map { i =>
+      val off = i * dims
+      val want = graft.functions.DistanceKernels.hamming(
+        arr(sparse.slice(off, off + dims)), arr(sq))
+      assert(Ivf.flatScoreKernel("hamming")(sparse, off, dims, sq, 0, 0) ==
+        want, s"scalar hamming row=$i")
+      assert(graft.ann.Simd.flatKernel("hamming").get(
+        sparse, off, dims, sq, 0, 0) == want, s"simd hamming row=$i")
+      want
+    }
+    assert(hams.distinct.size > 1, s"hamming distances $hams")
     // zero-vector convention (cosine): both kernels pin the distance to 1
     val zeros = new Array[Float](dims)
     assert(graft.ann.Simd.flatKernel("cosine").get(

@@ -50,7 +50,7 @@ class GraphqlApiSpec extends SparkSpec {
 
   test("collection CRUD through mutations and queries " +
       "(test_collection_crud parity)") {
-    val (g, _) = gql()
+    val (g, a) = gql()
     // create
     val (_, c) = run(g, """{"query":
       "mutation { createCollection(input: {name: \"test\", dimensions: 128}) { name dimensions distanceFunction vectorCount isEmpty } }"}""")
@@ -73,6 +73,16 @@ class GraphqlApiSpec extends SparkSpec {
     // createCollection echo casing
     assert(one.get("data").get("collection")
       .get("distanceFunction").asText() == "Cosine")
+    // an enum spelling creates the store metric and reads back as itself
+    val (_, dp) = run(g, """{"query":
+      "mutation { createCollection(input: {name: \"dp\", dimensions: 4, distanceFunction: \"DotProduct\"}) { distanceFunction } }"}""")
+    assert(dp.get("errors") == null, dp)
+    assert(a.collectionMetric("dp").contains("dot"))
+    val (_, dpRead) = run(g,
+      """{"query": "{ collection(name: \"dp\") { distanceFunction } }"}""")
+    assert(dpRead.get("data").get("collection")
+      .get("distanceFunction").asText() == "DotProduct")
+    assert(a.handle("DELETE", "/collections/dp", "")._1 == 200)
     val (_, none) = run(g,
       """{"query": "{ collection(name: \"ghost\") { name } }"}""")
     assert(none.get("data").get("collection").isNull)

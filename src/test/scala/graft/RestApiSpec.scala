@@ -412,6 +412,40 @@ class RestApiSpec extends SparkSpec {
     }
   }
 
+  /** Descriptions of the Spark jobs `body` starts ("counted" unless a
+    * job sets its own), in start order.
+    */
+  private def jobsOf(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val group = "rest-jobs-" + System.nanoTime()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val p = Option(e.properties)
+        if (p.exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.add(p.map(_.getProperty("spark.job.description")).orNull)
+        ()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      body
+      // a marker job flushes the listener bus up to this point
+      sc.setJobDescription("marker")
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!jobs.contains("marker") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.clearJobGroup(); sc.setJobDescription(null)
+    }
+    import scala.jdk.CollectionConverters._
+    jobs.asScala.toSeq.takeWhile(_ != "marker")
+  }
+
   /** Longest dependency chain below `rdd`, walked level by level so a
     * deep lineage cannot overflow the walk itself.
     */
@@ -464,36 +498,14 @@ class RestApiSpec extends SparkSpec {
     // pins it: from here on every base is a materialized checkpoint
     write()
     exactTop(vec(0))
-    val sc = spark.sparkContext
-    val group = "rest-lineage-" + System.nanoTime()
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val p = Option(e.properties)
-        jobs.add((p.map(_.getProperty("spark.jobGroup.id")).orNull,
-          p.map(_.getProperty("spark.job.description")).orNull)); ()
-      }
-    }
-    sc.addSparkListener(listener)
     var depth10 = -1
-    try {
-      sc.setJobGroup(group, "lineage regression")
+    val loopJobs = jobsOf {
       (1 to 150).foreach { w =>
         write()
         val (s, out) = a.handle("POST", "/collections/c/search", annRead)
         assert(s == 200, out)
         if (w == 10) depth10 = lineageDepth(a.collectionFrame("c").rdd)
       }
-      // a marker job flushes the listener bus up to this point
-      sc.setJobDescription("marker")
-      spark.range(1).count()
-      val deadline = System.nanoTime() + 30e9.toLong
-      while (!jobs.toArray.exists(_ == ((group, "marker"))) &&
-          System.nanoTime() < deadline) Thread.sleep(20)
-    } finally {
-      sc.removeSparkListener(listener)
-      sc.clearJobGroup(); sc.setJobDescription(null)
     }
     val (gs, got) = a.handle("GET", "/collections/c", "")
     assert(gs == 200, got)
@@ -508,8 +520,6 @@ class RestApiSpec extends SparkSpec {
         .sorted.take(10).map(_._2)
       assert(exactTop(q).toSet == brute.toSet, s"query $q")
     }
-    val loopJobs = jobs.toArray.toSeq.map(_.asInstanceOf[(String, String)])
-      .filter(_._1 == group).map(_._2).takeWhile(_ != "marker")
     // entries after the pinning write, then 16 per write
     var size = 16
     val compactions = (1 to 150).count { _ =>
@@ -635,11 +645,9 @@ class RestApiSpec extends SparkSpec {
       "pre-guard, before any ranking/checkpoint work") {
     val a = api
     (1 to 6).foreach(i => insert(a, s"v$i", Seq(i.toDouble, 0, 0)))
-    // 6 live rows > bound 5: the limit(N+1)-count pre-guard fires. Its
-    // message ("collection exceeds") is distinct from the post-checkpoint
-    // guard's ("<n> rows exceeds"), so this pins WHICH guard refused —
-    // the cheap one, before the rank + whole-collection localCheckpoint
-    // (the ADVICE r14 resource-amplification fix).
+    // 6 live rows > bound 5: the build's bounded collect brings at most
+    // 6 rows to the driver, the same bound a build at the limit collects,
+    // and refuses with the "collection exceeds" message.
     val e = intercept[IllegalArgumentException] {
       a.buildIndex("docs", """{"num_cells":2}""", maxRows = 5L)
     }
@@ -727,6 +735,172 @@ class RestApiSpec extends SparkSpec {
       mapper.readTree(invBody).get("code").asText() == "NO_INDEX")
     // drop route idempotent
     assert(a.handle("DELETE", "/collections/docs/index", "")._1 == 200)
+  }
+
+  test("an index build is one Spark job and publishes Ivf.build's " +
+      "snapshot over the same live rows") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    import graft.ann.{Ivf, LocalServe}
+    val a = new RestApi(spark)
+    def vec(i: Int): Seq[Float] =
+      (0 until 8).map(d => math.sin(i * 0.91 + d * 1.3).toFloat)
+    // ids out of id order in the scan, over three pinned partitions
+    val rows = (0 until 500).map(i => f"r${i * 7919 % 500}%04d" -> vec(i))
+    a.register("c", rows.toDF("id", "vector").repartition(3)
+      .localCheckpoint(true), dims = 8)
+    assert(a.handle("POST", "/collections/c/vectors/upsert-batch",
+      upsertBody(Seq("r0003" -> vec(900), "n0001" -> vec(901))))._1 == 200)
+    assert(a.handle("POST", "/collections/c/vectors/delete-batch",
+      """{"ids":["r0007"]}""")._1 == 200)
+    val frame = a.collectionFrame("c")
+    val jobs = jobsOf {
+      val (s, out) = a.handle("POST", "/collections/c/index",
+        """{"num_cells":6}""")
+      assert(s == 200, out)
+    }
+    assert(jobs.size == 1, s"index build jobs: $jobs")
+    val ann = a.annState("c")
+    assert(ann.covers && ann.rows == 500L)
+    // the parent's recipe over the rows in the order the build read them:
+    // surrogate ids by id order, Ivf.build, LocalServe.fromIndex
+    val scan = LocalServe.collectBounded(frame.select("id", "vector"),
+      LocalServe.DefaultMaxRows)
+    val ids = scan.map(_.getString(0)).sorted
+    val sid = ids.zipWithIndex.toMap
+    val ref = scan.toSeq.map(r => (sid(r.getString(0)).toLong,
+      r.getSeq[Float](1))).toDF("sid", "vector")
+    val ix = Ivf.build(ref, col("vector"), 6, "cosine")
+    val li = LocalServe.fromIndex(ix, "sid", "vector")
+    def same[T](x: Array[Array[T]], y: Array[Array[T]]) =
+      x.length == y.length && x.indices.forall(i => x(i).sameElements(y(i)))
+    assert(ann.ids.sameElements(ids))
+    assert(same(ann.li.centroids, ix.centroids))
+    assert(same(ann.li.cellIds, li.cellIds))
+    assert(same(ann.li.cellVecs, li.cellVecs))
+    assert(same(ann.li.cellNorms2, li.cellNorms2))
+    // and the cells are the ones Spark's Ivf.cellOf assigns, scan order
+    // kept within each cell
+    val byCell = ix.assigned.select(col("cell"), col("sid")).collect()
+      .groupBy(_.getInt(0)).map { case (c, rs) => c -> rs.map(_.getLong(1)) }
+    assert(ann.li.cellIds.indices.forall(c =>
+      ann.li.cellIds(c).sameElements(byCell.getOrElse(c, Array.empty[Long]))))
+  }
+
+  test("ann search at nprobe = num_cells equals exact search for every " +
+      "metric and an alias spelling") {
+    val a = new RestApi(spark)
+    // small integers, zeros included, so hamming distances vary
+    def vec(i: Int): Seq[Int] = (0 until 6).map(d => (i * 7 + d * d * 3) % 5 - 2)
+    val rows = (0 until 60).map(i => f"v$i%02d" -> vec(i).map(_.toFloat))
+    val spellings = graft.functions.Metric.all.map(_.name) :+ "l2"
+    spellings.foreach { m =>
+      val name = s"m_$m"
+      assert(a.handle("POST", "/collections",
+        s"""{"name":"$name","dimensions":6,"distance":"$m"}""")._1 == 201)
+      assert(a.handle("POST", s"/collections/$name/vectors/batch",
+        upsertBody(rows))._1 == 200)
+      val (bs, bb) = a.handle("POST", s"/collections/$name/index",
+        """{"num_cells":4}""")
+      assert(bs == 200, s"$m: $bb")
+      Seq(vec(3), vec(17).map(-_), Seq(1, 0, 0, 2, 0, -1)).foreach { q =>
+        val v = q.mkString(",")
+        def hits(mode: String) = {
+          val (s, out) = a.handle("POST", s"/collections/$name/search",
+            s"""{"vector":[$v],"k":10$mode}""")
+          assert(s == 200, s"$m: $out")
+          val rs = mapper.readTree(out).get("results")
+          (0 until rs.size()).map(i => (rs.get(i).get("id").asText(),
+            rs.get(i).get("distance").asDouble()))
+        }
+        assert(hits(""","mode":"ann","nprobe":4""") == hits(""),
+          s"metric $m query $q")
+      }
+    }
+    // the stored metric is the canonical name: an alias in the request
+    // passes the ann guard, a foreign metric does not
+    assert(a.collectionMetric("m_l2").contains("euclidean"))
+    assert(a.handle("POST", "/collections/m_l2/search",
+      """{"vector":[1,0,0,0,0,0],"mode":"ann","distance":"L2"}""")._1 == 200)
+    assert(a.handle("POST", "/collections/m_l2/search",
+      """{"vector":[1,0,0,0,0,0],"mode":"ann","distance":"dot"}""")._1 == 400)
+    val (bad, badBody) = a.handle("POST", "/collections",
+      """{"name":"bad","dimensions":3,"distance":"nope"}""")
+    assert(bad == 400 &&
+      mapper.readTree(badBody).get("code").asText() == "INVALID_DISTANCE")
+    assert(a.handle("GET", "/collections/bad", "")._1 == 404)
+  }
+
+  test("collection counts come from a covering snapshot with no Spark job") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val a = new RestApi(spark)
+    def vec(i: Int): Seq[Float] = Seq(math.sin(i).toFloat,
+      math.cos(i).toFloat, (i % 3).toFloat)
+    a.register("c", (0 until 200).map(i => s"r$i" -> vec(i))
+      .toDF("id", "vector").repartition(2, col("id")), dims = 3)
+    assert(a.handle("POST", "/collections/c/index",
+      """{"num_cells":4}""")._1 == 200)
+    assert(a.handle("POST", "/collections/c/vectors/upsert-batch",
+      upsertBody(Seq("r1" -> vec(301), "n1" -> vec(302), "n1" -> vec(303))))
+      ._1 == 200)
+    assert(a.handle("POST", "/collections/c/vectors/batch",
+      upsertBody(Seq("n2" -> vec(304), "n3" -> vec(305))))._1 == 200)
+    assert(a.handle("POST", "/collections/c/vectors/delete-batch",
+      """{"ids":["r2","r2","n3","nope"]}""")._1 == 200)
+    assert(a.handle("DELETE", "/collections/c/vectors/r5", "")._1 == 200)
+    assert(a.annState("c").covers)
+    var one, listed = -1L
+    val jobs = jobsOf {
+      one = mapper.readTree(a.handle("GET", "/collections/c", "")._2)
+        .get("count").asLong()
+      listed = mapper.readTree(a.handle("GET", "/collections", "")._2)
+        .get("collections").get(0).get("count").asLong()
+    }
+    assert(jobs.isEmpty, s"count jobs: $jobs")
+    val brute = a.collectionFrame("c").count()
+    assert(brute == 200L && one == brute && listed == brute)
+    // without a snapshot the count is Spark's
+    assert(a.handle("DELETE", "/collections/c/index", "")._1 == 200)
+    assert(mapper.readTree(a.handle("GET", "/collections/c", "")._2)
+      .get("count").asLong() == brute)
+  }
+
+  test("an index build over more than 100 000 rows trains on a seeded " +
+      "sample independent of partitioning, and keeps recall") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    val centers = Array.fill(32, 8)(rnd.nextGaussian().toFloat)
+    val rows = (0 until 120000).map { i =>
+      val c = centers(i % 32)
+      f"p$i%06d" -> c.map(x => x + 0.3f * rnd.nextGaussian().toFloat).toSeq
+    }
+    val df = rows.toDF("id", "vector")
+    val a = new RestApi(spark)
+    a.register("c2", df.repartition(2).localCheckpoint(true), dims = 8)
+    a.register("c5", df.repartition(5).localCheckpoint(true), dims = 8)
+    Seq("c2", "c5").foreach { c =>
+      val (s, out) = a.handle("POST", s"/collections/$c/index",
+        """{"num_cells":16,"nprobe":4}""")
+      assert(s == 200, out)
+    }
+    val (x, y) = (a.annState("c2").li, a.annState("c5").li)
+    assert(x.centroids.length == 16 &&
+      x.centroids.indices.forall(i => x.centroids(i).sameElements(y.centroids(i))),
+      "the training sample depends on the partition layout")
+    val queries = (0 until 20).map(i => rows(i * 4999)._2.map(_ + 0.05f))
+    val recall = queries.map { q =>
+      def ids(mode: String) = {
+        val (s, out) = a.handle("POST", "/collections/c2/search",
+          s"""{"vector":[${q.mkString(",")}],"k":10$mode}""")
+        assert(s == 200, out)
+        val rs = mapper.readTree(out).get("results")
+        (0 until rs.size()).map(i => rs.get(i).get("id").asText()).toSet
+      }
+      ids(""","mode":"ann"""").intersect(ids("")).size / 10.0
+    }.sum / queries.size
+    assert(recall >= 0.9, s"recall@10 = $recall")
   }
 
   test("live HTTP round-trip through the JDK host") {
