@@ -3,7 +3,7 @@ package graft.ann
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.Distances
+import graft.functions.{Distances, Metric}
 
 /** IVF (inverted-file) approximate nearest-neighbor search — the
   * Spark-natural ANN (SURVEY.md §7.1 step 13; the reference's own IVF is the
@@ -91,8 +91,9 @@ object Ivf {
     * and zero Spark jobs, where an MLlib fit is ~2 jobs per iteration.
     */
   def build(df: DataFrame, vecCol: Column, numCells: Int,
-            metric: String = "cosine", seed: Long = 42L,
-            maxIter: Int = 20, maxTrainRows: Int = 100000): Index = {
+            metric: String = "cosine", seed: Long = TrainSeed,
+            maxIter: Int = TrainIters,
+            maxTrainRows: Int = MaxTrainRows): Index = {
     val train: Array[Array[Float]] = boundedSample(
       df.select(vecCol.cast("array<float>").as("v")), maxTrainRows, seed)
       .collect()
@@ -101,6 +102,13 @@ object Ivf {
     Index(centroids, df.withColumn("cell", cellOf(vecCol, centroids, metric)),
       metric)
   }
+
+  /** [[build]]'s training defaults, shared by [[LocalServe.build]] so a
+    * driver-side build fits the same centroids over the same rows.
+    */
+  private[graft] val TrainSeed = 42L
+  private[graft] val TrainIters = 20
+  private[graft] val MaxTrainRows = 100000
 
   /** Seeded k-means++ init + Lloyd iterations, squared-euclidean (the same
     * objective MLlib's KMeans optimizes), f64 accumulation.
@@ -195,28 +203,23 @@ object Ivf {
   }
 
   /** The nprobe cells nearest to the query (driver-side over the tiny
-    * centroid set).
+    * centroid set), ranked by the metric's own flat kernel with the lower
+    * cell first among equal distances — the order [[cellOf]] assigns by,
+    * so the first cell probed for a row's vector is the row's own cell.
     */
   def probeCells(ix: Index, query: Array[Float], nprobe: Int): Seq[Int] =
     probeCells(ix.centroids, ix.metric, query, nprobe)
 
   def probeCells(centroids: Array[Array[Float]], metric: String,
                  query: Array[Float], nprobe: Int): Seq[Int] = {
-    def dist(a: Array[Float], b: Array[Float]): Double = {
-      // driver-side mirror of the cosine/euclidean kernels
-      metric match {
-        case "cosine" =>
-          var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-          while (i < a.length) { dot += a(i).toDouble * b(i); na += a(i).toDouble * a(i); nb += b(i).toDouble * b(i); i += 1 }
-          if (na == 0 || nb == 0) 1.0 else 1.0 - dot / (math.sqrt(na) * math.sqrt(nb))
-        case _ =>
-          var s = 0.0; var i = 0
-          while (i < a.length) { val d = a(i).toDouble - b(i); s += d * d; i += 1 }
-          math.sqrt(s)
-      }
-    }
+    val m = Metric.parse(metric).name
+    val score = flatScoreKernel(m)
+    val qn2 = if (m == "cosine") norm2(query) else 0.0
     centroids.zipWithIndex
-      .map { case (c, i) => (dist(query, c), i) }
+      .map { case (c, i) =>
+        val cn2 = if (m == "cosine") norm2(c) else 0.0
+        (score(query, 0, query.length, c, qn2, cn2), i)
+      }
       .sortBy(x => (x._1, x._2))
       .take(nprobe).map(_._2).toSeq
   }

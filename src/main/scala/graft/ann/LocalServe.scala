@@ -1,6 +1,6 @@
 package graft.ann
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 /** Driver-local point-query serving — the in-process answer path for the
@@ -19,8 +19,9 @@ import org.apache.spark.sql.functions._
   *     rebuild-on-mutation character (its inserts rebuild HNSW segments).
   *
   * Results are bit-identical to [[Ivf.search]] at the same (k, nprobe):
-  * the same cells ([[fromRows]] assigns them as [[Ivf.cellOf]] does), the
-  * same probe algebra ([[Ivf.probeCells]]), the same flat kernels
+  * the same cells ([[build]] and [[addBatch]] assign them as
+  * [[Ivf.cellOf]] does), the same probe algebra ([[Ivf.probeCells]],
+  * which ranks cells under the same metric), the same flat kernels
   * ([[Ivf.flatScoreKernel]]), the same (distance, id) tie order (AnnSpec
   * asserts equality row by row for every metric). With `simd = true` the
   * f32 [[VectorSimd]] kernel scores instead — recall-contracted rather
@@ -56,37 +57,28 @@ object LocalServe {
       cellIds.iterator.map(_.length.toLong).sum - tombstones.size()
   }
 
-  /** At most `maxRows + 1` rows of `df` from one Spark job: the driver
-    * never holds more than the bound plus one, and more than `maxRows`
-    * rows back means the frame is over it. The job's one task reads the
-    * partitions in turn and stops at the bound, where a bare `limit`
-    * collect schedules a further job each time the partitions read so
-    * far fall short of it.
-    */
-  def collectBounded(df: DataFrame, maxRows: Long): Array[Row] =
-    df.coalesce(1).limit(math.min(maxRows, Int.MaxValue - 1L).toInt + 1)
-      .collect()
-
-  /** Materialize a driver-local snapshot of an IVF index: one bounded
-    * collect of (id, vector[, payload]), cells assigned on the driver by
-    * [[fromRows]]. Refuses collections beyond `maxRows` (the
-    * driver-memory guard — this is the small-collection serving tier,
-    * not a general path).
+  /** Materialize a driver-local snapshot of an IVF index: one parallel
+    * collect of (id, cell, vector[, payload]), each row in the cell Spark
+    * assigned it. Refuses collections beyond `maxRows` (the driver-memory
+    * guard — this is the small-collection serving tier, not a general
+    * path).
     */
   def fromIndex(ix: Ivf.Index, idCol: String = "id",
                 vecCol: String = "vector",
                 maxRows: Long = DefaultMaxRows,
                 payloadCol: Option[String] = None): LocalIndex = {
-    val rows = collectBounded(ix.assigned.select(
-      Seq(col(idCol).cast("long"), col(vecCol).cast("array<float>")) ++
-        payloadCol.map(c => col(c).cast("long")): _*), maxRows)
-    require(rows.length <= maxRows,
-      s"LocalServe.fromIndex: more than maxRows=$maxRows rows — " +
+    val n = ix.assigned.count()
+    require(n <= maxRows,
+      s"LocalServe.fromIndex: $n rows exceeds maxRows=$maxRows — " +
         "driver-local serving is for collections that fit on the driver; " +
         "use Ivf.batchSearchPacked for larger ones")
-    fromRows(ix.centroids, ix.metric, rows.map(_.getLong(0)),
-      rows.map(vectorAt(_, 1)),
-      if (payloadCol.isDefined) rows.map(_.getLong(2)) else null)
+    val rows = ix.assigned.select(
+      Seq(col(idCol).cast("long"), col("cell").cast("int"),
+        col(vecCol).cast("array<float>")) ++
+        payloadCol.map(c => col(c).cast("long")): _*).collect()
+    assemble(ix.centroids, ix.metric, rows.map(_.getLong(0)),
+      rows.map(vectorAt(_, 2)), rows.map(_.getInt(1)),
+      if (payloadCol.isDefined) rows.map(_.getLong(3)) else null)
   }
 
   /** A row's vector column as a primitive array; null is refused. */
@@ -95,34 +87,44 @@ object LocalServe {
     r.getSeq[Float](i).toArray
   }
 
-  /** Fit `numCells` centroids on the driver ([[Ivf.localKMeans]]) and
-    * assemble the snapshot of rows already there. At most `maxTrainRows`
-    * rows train: all of them in input order when they fit (the set and
-    * order [[Ivf.boundedSample]] yields for the same scan), otherwise a
-    * seeded sample drawn over the rows in id order, so it does not depend
-    * on how the input was partitioned.
+  /** Fit `numCells` centroids on the driver ([[Ivf.localKMeans]], with
+    * [[Ivf.build]]'s training defaults) and assemble the snapshot of rows
+    * already there, each row in the cell of its nearest centroid as
+    * [[Ivf.cellOf]] would assign it. At most [[Ivf.MaxTrainRows]] rows
+    * train: all of them in input order when they fit (the set and order
+    * [[Ivf.boundedSample]] yields for the same scan), otherwise a seeded
+    * sample drawn over the rows in id order, so it does not depend on how
+    * the input was partitioned.
     */
   def build(ids: Array[Long], vecs: Array[Array[Float]], numCells: Int,
-            metric: String, seed: Long = 42L, maxIter: Int = 20,
-            maxTrainRows: Int = 100000): LocalIndex = {
+            metric: String): LocalIndex = {
+    require(ids.length == vecs.length,
+      "LocalServe.build: ids and vectors differ in length")
     val train =
-      if (vecs.length <= maxTrainRows) vecs
+      if (vecs.length <= Ivf.MaxTrainRows) vecs
       else {
         val byId = Array.range(0, ids.length).sortBy(ids(_))
-        // partial Fisher-Yates: the first maxTrainRows slots end up a
+        // partial Fisher-Yates: the first MaxTrainRows slots end up a
         // uniform sample of the id-ordered positions
         val pos = Array.range(0, ids.length)
-        val rnd = new scala.util.Random(seed)
+        val rnd = new scala.util.Random(Ivf.TrainSeed)
         var i = 0
-        while (i < maxTrainRows) {
+        while (i < Ivf.MaxTrainRows) {
           val j = i + rnd.nextInt(pos.length - i)
           val t = pos(i); pos(i) = pos(j); pos(j) = t
           i += 1
         }
-        pos.take(maxTrainRows).sorted.map(p => vecs(byId(p)))
+        pos.take(Ivf.MaxTrainRows).sorted.map(p => vecs(byId(p)))
       }
-    fromRows(Ivf.localKMeans(train, numCells, maxIter, seed), metric, ids,
-      vecs)
+    val centroids =
+      Ivf.localKMeans(train, numCells, Ivf.TrainIters, Ivf.TrainSeed)
+    val nearest = nearestCell(centroids, metric)
+    val cosine = metric == "cosine"
+    val cells = new Array[Int](vecs.length)
+    java.util.stream.IntStream.range(0, vecs.length).parallel().forEach { r =>
+      cells(r) = nearest(vecs(r), if (cosine) Ivf.norm2(vecs(r)) else 0.0)
+    }
+    assemble(centroids, metric, ids, vecs, cells, null)
   }
 
   /** The cell of a vector's nearest centroid, given the vector and its
@@ -147,31 +149,21 @@ object LocalServe {
     }
   }
 
-  /** The one constructor of a [[LocalIndex]]. Each row joins the cell of
-    * its nearest centroid under the metric's flat kernel
-    * ([[Ivf.flatScoreKernel]], the mirror of the `dist_*` kernels), as
-    * [[Ivf.cellOf]] assigns it. Each cell keeps its rows in input order.
-    * `payload` is null for an index without a filter attribute.
+  /** Pack rows into per-cell flat arrays, `cells(r)` naming row r's cell;
+    * each cell keeps its rows in input order. `payload` is null for an
+    * index without a filter attribute.
     */
-  def fromRows(centroids: Array[Array[Float]], metric: String,
-               ids: Array[Long], vecs: Array[Array[Float]],
-               payload: Array[Long] = null): LocalIndex = {
+  private def assemble(centroids: Array[Array[Float]], metric: String,
+                       ids: Array[Long], vecs: Array[Array[Float]],
+                       cells: Array[Int], payload: Array[Long]): LocalIndex = {
     val dims = centroids.headOption.map(_.length).getOrElse(0)
     val numCells = centroids.length
     val n = ids.length
-    require(vecs.length == n && (payload == null || payload.length == n),
-      "LocalServe.fromRows: ids, vectors and payload differ in length")
     require(vecs.forall(_.length == dims),
-      s"LocalServe.fromRows: vector dims must equal centroid dims $dims")
+      s"LocalServe: vector dims must equal centroid dims $dims")
     val cosine = metric == "cosine"
-    val rowNorms2 = if (cosine) vecs.map(Ivf.norm2) else null
-    val nearest = nearestCell(centroids, metric)
-    val cellOf = new Array[Int](n)
-    java.util.stream.IntStream.range(0, n).parallel().forEach { row =>
-      cellOf(row) = nearest(vecs(row), if (cosine) rowNorms2(row) else 0.0)
-    }
     val counts = new Array[Int](numCells)
-    cellOf.foreach(c => counts(c) += 1)
+    cells.foreach(c => counts(c) += 1)
     val cellIds = Array.tabulate(numCells)(c => new Array[Long](counts(c)))
     val cellVecs = Array.tabulate(numCells)(c => new Array[Float](counts(c) * dims))
     val cellNorms2 = Array.tabulate(numCells)(c =>
@@ -181,11 +173,11 @@ object LocalServe {
     val fill = new Array[Int](numCells)
     var r = 0
     while (r < n) {
-      val c = cellOf(r)
+      val c = cells(r)
       val i = fill(c); fill(c) = i + 1
       cellIds(c)(i) = ids(r)
       System.arraycopy(vecs(r), 0, cellVecs(c), i * dims, dims)
-      if (cosine) cellNorms2(c)(i) = rowNorms2(r)
+      if (cosine) cellNorms2(c)(i) = Ivf.norm2(vecs(r))
       if (payload != null) cellPayload(c)(i) = payload(r)
       r += 1
     }
@@ -196,9 +188,10 @@ object LocalServe {
   /** Incremental insert — the serve-under-writes path (the reference's
     * in-memory index takes inserts without a rebuild; this is the same
     * contract for the snapshot tier). Each vector lands in its nearest
-    * centroid's cell, chosen as [[fromRows]] chooses it; every touched
-    * cell's arrays are copied ONCE per
-    * batch (grouped), untouched cells are shared, so the returned index
+    * centroid's cell, chosen as [[build]] chooses it (the cell
+    * [[Ivf.probeCells]] ranks first for that vector); every touched
+    * cell's arrays are copied ONCE per batch (grouped), untouched cells
+    * are shared, so the returned index
     * is safe to publish while searches run against the old one. This
     * appends blindly, exactly like the engine's insert (dedup is the
     * caller's policy); replacing a live id = [[remove]] the old id +

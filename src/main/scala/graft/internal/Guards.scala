@@ -20,7 +20,7 @@ import org.apache.spark.sql.DataFrame
   * contract. The batch entry points need no window bound at all: CF
   * fit's dense-id numbering ranks through `DistributedRank.rankedByRange`,
   * and REST buildIndex numbers its surrogate ids on the driver over rows
-  * that `LocalServe.collectBounded` already held to the driver memory
+  * that its bounded collect already held to the driver memory
   * budget. WindowLintSpec pins the
   * complete allowlist of remaining unpartitioned-window sites.
   */

@@ -570,11 +570,11 @@ class RestApi(spark: SparkSession) {
     val (frame, version) = synchronized((c.df, c.version))
     val now = nowEpochS()
     val cols = frame.select(col("id"), col("vector"), col("ttl_expires_at"))
-    val all = graft.ann.LocalServe.collectBounded(cols, maxRows)
+    val all = collectBounded(cols, maxRows)
     val rows =
       if (all.length <= maxRows)
         all.filter(r => r.isNullAt(2) || r.getLong(2) > now)
-      else graft.ann.LocalServe.collectBounded(live(cols, now), maxRows)
+      else collectBounded(live(cols, now), maxRows)
     Predef.require(rows.length <= maxRows,
       s"build_index('$name'): collection exceeds the in-process serving " +
         s"bound ($maxRows); use Ivf.batchSearchPacked for collections " +
@@ -603,6 +603,20 @@ class RestApi(spark: SparkSession) {
       o.put("nprobe", nprobe)
     })
   }
+
+  /** At most `maxRows + 1` rows of `df` from one Spark job: the driver
+    * never holds more than the bound plus one, and more than `maxRows`
+    * rows back means the frame is over it. The job's one task reads the
+    * partitions in turn and stops at the bound, where a bare `limit`
+    * collect schedules a further job each time the partitions read so
+    * far fall short of it. The one task also runs the whole upstream
+    * plan serially, so this stays on the REST build, whose frame is a
+    * collection's rows; `LocalServe.fromIndex`, whose input computes a
+    * cell per row, collects in parallel behind a count instead.
+    */
+  private def collectBounded(df: DataFrame, maxRows: Long): Array[Row] =
+    df.coalesce(1).limit(math.min(maxRows, Int.MaxValue - 1L).toInt + 1)
+      .collect()
 
   private def indexStatus(name: String): (Int, String) = {
     val a = coll(name).ann

@@ -122,6 +122,30 @@ class AnnSpec extends SparkSpec {
     }
   }
 
+  test("a row's cell is the first cell probed for its vector, for every " +
+      "metric, built or written") {
+    for (metric <- metrics) {
+      val ix = Ivf.build(embFor(metric), col("embedding"), numCells = 8,
+        metric)
+      val rows = ix.assigned.select(col("cell"), col("embedding")).collect()
+        .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
+      val off = rows.count { case (cell, v) =>
+        Ivf.probeCells(ix, v, 1).head != cell }
+      assert(off == 0, s"metric=$metric: $off of ${rows.length} rows " +
+        "outside the cell probed first for their own vector")
+      // a row written after the build is read back at nprobe 1: k above
+      // the row count returns the whole probed cell
+      val writes = rows.take(60).zipWithIndex.map { case ((_, v), i) =>
+        (1000000L + i, v.reverse, 0L) }
+      val li = LocalServe.addBatch(
+        LocalServe.fromIndex(ix, "vec_id", "embedding"), writes)
+      val missed = writes.count { case (id, v, _) =>
+        !LocalServe.search(li, v, 1000, 1).exists(_._1 == id) }
+      assert(missed == 0, s"metric=$metric: $missed of ${writes.length} " +
+        "written rows not found at nprobe 1")
+    }
+  }
+
   test("LocalServe filtered point query at full probe equals exact filtered top-k") {
     import graft.ann.LocalServe
     val ix = Ivf.build(emb, col("embedding"), numCells = 8)

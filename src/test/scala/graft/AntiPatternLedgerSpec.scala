@@ -45,8 +45,6 @@ class AntiPatternLedgerSpec extends AnyFunSuite {
     // the count()-then-collect pair; the count site remains for the
     // over-bound fallback)
     "ann/Ivf.scala" -> 7,
-    // LocalServe.collectBounded: the one limit(maxRows+1) collect every
-    // snapshot build (fromIndex, RestApi's index build) goes through
     "ann/LocalServe.scala" -> 1,
     "ann/Matryoshka.scala" -> 1,
     "ann/Quantization.scala" -> 4,
@@ -115,9 +113,9 @@ class AntiPatternLedgerSpec extends AnyFunSuite {
     "queries/TemporalQueries.scala" -> 1,
     "queries/VectorAggQueries.scala" -> 1,
     // host surfaces: k-/page-bounded response materialization
-    // −1: buildIndex's surrogate-id collect is gone; its rows come from
-    // LocalServe's one bounded collect
-    "server/RestApi.scala" -> 8,
+    // buildIndex's one limit(maxRows+1) collect replaced its surrogate-id
+    // collect (the training rows came from Ivf.build's collect)
+    "server/RestApi.scala" -> 9,
     "server/WebUi.scala" -> 1,
     "streaming/Triggers.scala" -> 1,
     // r20 wave 9: the shared smallProbe for the dedup-family small paths

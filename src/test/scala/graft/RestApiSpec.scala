@@ -762,10 +762,10 @@ class RestApiSpec extends SparkSpec {
     assert(jobs.size == 1, s"index build jobs: $jobs")
     val ann = a.annState("c")
     assert(ann.covers && ann.rows == 500L)
-    // the parent's recipe over the rows in the order the build read them:
-    // surrogate ids by id order, Ivf.build, LocalServe.fromIndex
-    val scan = LocalServe.collectBounded(frame.select("id", "vector"),
-      LocalServe.DefaultMaxRows)
+    // the Spark-side recipe over the rows in the order the build reads
+    // them (one coalesced task): surrogate ids by id order, Ivf.build,
+    // LocalServe.fromIndex
+    val scan = frame.select("id", "vector").coalesce(1).collect()
     val ids = scan.map(_.getString(0)).sorted
     val sid = ids.zipWithIndex.toMap
     val ref = scan.toSeq.map(r => (sid(r.getString(0)).toLong,
@@ -815,6 +815,22 @@ class RestApiSpec extends SparkSpec {
         }
         assert(hits(""","mode":"ann","nprobe":4""") == hits(""),
           s"metric $m query $q")
+      }
+      // a row written after the build is read back by ANN at nprobe 1
+      // with its own vector: k above the row count returns the whole
+      // probed cell, which must be the cell the write went to
+      val writes = (0 until 12).map(j => f"w$j%02d" ->
+        (0 until 6).map(d => (2 * math.sin(j * 1.7 + d * 0.9)).toFloat))
+      assert(a.handle("POST", s"/collections/$name/vectors/upsert-batch",
+        upsertBody(writes))._1 == 200)
+      writes.foreach { case (id, w) =>
+        val (s, out) = a.handle("POST", s"/collections/$name/search",
+          s"""{"vector":[${w.mkString(",")}],"k":1000,"mode":"ann",""" +
+            """"nprobe":1}""")
+        assert(s == 200, s"$m: $out")
+        val rs = mapper.readTree(out).get("results")
+        assert((0 until rs.size()).exists(i => rs.get(i).get("id").asText() == id),
+          s"metric $m: $id written but not read back at nprobe 1")
       }
     }
     // the stored metric is the canonical name: an alias in the request
