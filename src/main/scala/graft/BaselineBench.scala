@@ -32,8 +32,9 @@ import graft.ops.Search
   *     that survives 100×, and the fair peer of the reference's batch row.
   *   - `insert_append`: rows/s appending a batch as a parquet file into
   *     the collection dir (the table-format ingest path).
-  *   - `upsert_checkpoint`: rows/s through the REST layer's
-  *     union + localCheckpoint mutation (driver-registry path).
+  *   - `upsert_checkpoint`: rows/s of a 1000-row replace materialized
+  *     as one union + localCheckpoint — the shape of one `RestApi`
+  *     compaction (REST writes themselves land in a driver-side delta).
   *   - `ivf_*`: recall@10 and wall-clock of cell-pruned search vs the
   *     exact scan at the same k, tuning evidence for the ANN mode.
   *
@@ -335,7 +336,7 @@ object BaselineBench {
       // which the top-k legitimately breaks toward the older entry.
       val wrows = queryVecs(1000).zipWithIndex.map { case (v0, i) =>
         val v = v0.clone(); v(0) += 1.0f
-        ((2000000 + i).toLong, v, 0L)
+        ((2000000 + i).toLong, v)
       }
       val (li2, addMs) = timeMs(LocalServe.addBatch(li, wrows))
       out("ann_live_upsert_1000_ms") = addMs
@@ -393,37 +394,6 @@ object BaselineBench {
         out(s"filtered_simd_batch2000_nprobe${nprobe}_qps") = 1000.0 / sMs2000
       }
       pxf.unpersist()
-    }
-
-    // ---- packed-layout persistence: the serving-restart path -----------
-    // pack() is session-lifetime; a restart re-maps parquet via
-    // loadPacked instead of re-running assignment + packing (at 100× the
-    // collection a re-pack costs minutes of cluster time, a re-map reads
-    // columnar bytes)
-    {
-      val px = packedCache(256)
-      val dir = s"$dataDir/packed256"
-      val (_, wms) = timeMs(Ivf.writePacked(px, dir))
-      out("packed256_write_ms") = wms
-      val (lpx, lms) = timeMs(Ivf.loadPacked(spark, dir))
-      out("packed256_load_ms") = lms
-      // evidence the loaded layout serves (row identity is spec-asserted)
-      Ivf.batchSearchPacked(lpx, q100.take(10), 10, 4, "id").collect()
-      lpx.unpersist()
-    }
-
-    // ---- delta segments on the distributed packed tier -----------------
-    {
-      val px = packedCache(256)
-      val wrows = queryVecs(1000).zipWithIndex.map { case (v, i) =>
-        ((3000000 + i).toLong, v, 0L)
-      }
-      val (dpx, dms) = timeMs(Ivf.addToPacked(px, wrows))
-      out("packed_delta_add_1000_ms") = dms
-      Ivf.batchSearchPacked(dpx, q100.take(10), 10, 4, "id").collect()
-      val (cpx, cms) = timeMs(Ivf.compactPacked(dpx))
-      out("packed_compact_ms") = cms
-      cpx.unpersist()
     }
 
     packedCache.values.foreach(_.unpersist())

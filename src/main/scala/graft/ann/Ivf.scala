@@ -339,132 +339,14 @@ object Ivf {
                                payload: Array[Long] = Array.emptyLongArray)
 
   /** The JVM-resident serving form of an [[Index]]: per-cell flat blocks
-    * persisted DESERIALIZED across the cluster. A cell may own several
-    * blocks — the base segment from [[pack]] plus delta segments from
-    * [[addToPacked]] (the kernel probes every block of a probed cell, so
-    * segmentation is invisible to results). `tombstones` marks
-    * logically-deleted ids ([[removeFromPacked]]); [[compactPacked]]
-    * merges segments and physically drops them.
+    * persisted DESERIALIZED across the cluster, one block per cell and
+    * partition from [[pack]] (the kernel probes every block of a probed
+    * cell).
     */
   final case class PackedIndex(centroids: Array[Array[Float]], metric: String,
                                dims: Int,
-                               blocks: org.apache.spark.rdd.RDD[PackedBlock],
-                               tombstones: Set[Long] = Set.empty) {
+                               blocks: org.apache.spark.rdd.RDD[PackedBlock]) {
     def unpersist(): Unit = blocks.unpersist()
-  }
-
-  /** Serve-under-writes for the DISTRIBUTED packed tier: a write batch
-    * becomes per-cell DELTA segments unioned onto the block RDD — the
-    * base segments are never touched (segment model, like any LSM-ish
-    * serving engine). Assignment runs on the driver (a serving write
-    * batch is small against the collection); re-inserted ids revive
-    * through the tombstone set. Payload continuity follows the base
-    * index: a payload-packed index takes the batch's payload longs, a
-    * non-payload one ignores them.
-    */
-  def addToPacked(px: PackedIndex,
-                  rows: Seq[(Long, Array[Float], Long)]): PackedIndex = {
-    import org.apache.spark.storage.StorageLevel
-    require(rows.forall(_._2.length == px.dims),
-      s"addToPacked: vector dims must equal index dims ${px.dims}")
-    // an id-level tombstone cannot distinguish the old physical copy
-    // from a re-inserted one — clearing it would resurrect both. The
-    // serving model is surrogate-id appends (RestApi.AnnState replaces
-    // by tombstoning the old surrogate and appending a fresh one);
-    // re-using a tombstoned id needs a compaction first.
-    require(rows.forall(r => !px.tombstones.contains(r._1)),
-      "addToPacked: id is tombstoned — compactPacked first, or append " +
-        "under a fresh surrogate id (the replace model RestApi uses)")
-    val spark = org.apache.spark.sql.SparkSession.active
-    val hasPayload = px.blocks.take(1).headOption.exists(_.payload.nonEmpty)
-    val needsNorm = px.metric == "cosine"
-    val dims = px.dims
-    val delta = rows.groupBy { case (_, v, _) =>
-      probeCells(px.centroids, px.metric, v, 1).head
-    }.map { case (cell, add) =>
-      val ids = add.map(_._1).toArray
-      val vecs = new Array[Float](add.size * dims)
-      val norms2 =
-        if (needsNorm) new Array[Double](add.size) else Array.emptyDoubleArray
-      add.zipWithIndex.foreach { case ((_, v, _), i) =>
-        System.arraycopy(v, 0, vecs, i * dims, dims)
-        if (needsNorm) norms2(i) = norm2(v)
-      }
-      val pay =
-        if (hasPayload) add.map(_._3).toArray else Array.emptyLongArray
-      PackedBlock(cell, ids, vecs, norms2, pay)
-    }.toSeq
-    val deltaRdd = spark.sparkContext
-      .parallelize(delta, math.max(1, math.min(delta.size, 8)))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    deltaRdd.count()
-    px.copy(blocks = px.blocks.union(deltaRdd))
-  }
-
-  /** Logical delete on the packed tier: tombstoned ids are skipped by
-    * the scan kernel; [[compactPacked]] (or [[writePacked]], a durable
-    * compaction point) drops them physically.
-    */
-  def removeFromPacked(px: PackedIndex, ids: Seq[Long]): PackedIndex =
-    px.copy(tombstones = px.tombstones ++ ids)
-
-  private def filterBlock(b: PackedBlock, tomb: Set[Long],
-                          dims: Int): PackedBlock = {
-    val keep = b.ids.indices.filterNot(i => tomb.contains(b.ids(i)))
-    if (keep.size == b.ids.length) b
-    else {
-      val ids = keep.map(b.ids).toArray
-      val vecs = new Array[Float](keep.size * dims)
-      keep.zipWithIndex.foreach { case (src, dst) =>
-        System.arraycopy(b.vecs, src * dims, vecs, dst * dims, dims)
-      }
-      val norms2 =
-        if (b.norms2.isEmpty) b.norms2 else keep.map(b.norms2).toArray
-      val pay =
-        if (b.payload.isEmpty) b.payload else keep.map(b.payload).toArray
-      PackedBlock(b.cell, ids, vecs, norms2, pay)
-    }
-  }
-
-  /** Segment merge: coalesce every cell's base + delta segments into one
-    * block and physically drop tombstoned rows. One bounded shuffle
-    * keyed by cell (the block count, not the row count, is the shuffle
-    * cardinality). Search results are identical before and after
-    * (spec-asserted) — compaction only changes the layout.
-    */
-  def compactPacked(px: PackedIndex): PackedIndex = {
-    import org.apache.spark.storage.StorageLevel
-    val tomb = px.tombstones
-    val dims = px.dims
-    val merged = px.blocks.keyBy(_.cell).groupByKey()
-      .map { case (cell, bs0) =>
-        val bs = bs0.map(filterBlock(_, tomb, dims)).toSeq
-        if (bs.size == 1) bs.head
-        else {
-          val n = bs.map(_.ids.length).sum
-          val ids = new Array[Long](n)
-          val vecs = new Array[Float](n * dims)
-          val hasNorm = bs.exists(_.norms2.nonEmpty)
-          val norms2 =
-            if (hasNorm) new Array[Double](n) else Array.emptyDoubleArray
-          val hasPay = bs.exists(_.payload.nonEmpty)
-          val pay = if (hasPay) new Array[Long](n) else Array.emptyLongArray
-          var at = 0
-          bs.foreach { b =>
-            System.arraycopy(b.ids, 0, ids, at, b.ids.length)
-            System.arraycopy(b.vecs, 0, vecs, at * dims,
-              b.ids.length * dims)
-            if (hasNorm)
-              System.arraycopy(b.norms2, 0, norms2, at, b.ids.length)
-            if (hasPay)
-              System.arraycopy(b.payload, 0, pay, at, b.ids.length)
-            at += b.ids.length
-          }
-          PackedBlock(cell, ids, vecs, norms2, pay)
-        }
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-    merged.count()
-    PackedIndex(px.centroids, px.metric, px.dims, merged, Set.empty)
   }
 
   /** Decode once, serve many: a scan over the assigned table pays a full
@@ -534,54 +416,6 @@ object Ivf {
     }.persist(StorageLevel.MEMORY_AND_DISK)
     blocks.count() // materialize now: packing cost is paid once, here
     PackedIndex(ix.centroids, ix.metric, dims, blocks)
-  }
-
-  /** Persist a packed serving layout. [[pack]] is session-lifetime — fine
-    * when the ~seconds rebuild is amortized, but at 100× the collection a
-    * re-pack on serving restart costs minutes of cluster time. Each
-    * [[PackedBlock]] becomes ONE parquet row of primitive arrays (a cell
-    * at 1M×384/256 cells ≈ 6 MB — well inside a row group), so a restart
-    * re-maps columnar bytes instead of re-running assignment + packing.
-    */
-  def writePacked(px: PackedIndex, path: String): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    import spark.implicits._
-    px.centroids.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq, px.metric, px.dims) }.toSeq
-      .toDF("cell", "centroid", "metric", "dims")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    // a durable write is a compaction point: tombstoned rows drop here
-    // (delta segments persist as extra rows — loadPacked serves them
-    // identically, and a later compactPacked merges the layout)
-    val tomb = px.tombstones
-    val dims = px.dims
-    px.blocks.map(filterBlock(_, tomb, dims)).filter(_.ids.nonEmpty)
-      .map(b => (b.cell, b.ids, b.vecs, b.norms2, b.payload))
-      .toDF("cell", "ids", "vecs", "norms2", "payload")
-      .write.mode("overwrite").parquet(s"$path/blocks")
-  }
-
-  /** Load a persisted packed layout back into the deserialized JVM-resident
-    * serving form. Blocks re-partition across the cluster on read
-    * (`maxPartitionBytes` governs the mapping — nothing driver-resident),
-    * and the same persist + materialize contract as [[pack]] applies, so
-    * a loaded index serves bit-identically to a freshly packed one
-    * (IvfStorageSpec asserts row identity).
-    */
-  def loadPacked(spark: org.apache.spark.sql.SparkSession,
-                 path: String): PackedIndex = {
-    import org.apache.spark.storage.StorageLevel
-    import spark.implicits._
-    val rows = spark.read.parquet(s"$path/centroids").orderBy("cell").collect()
-    require(rows.nonEmpty, s"no centroids at $path/centroids")
-    val blocks = spark.read.parquet(s"$path/blocks")
-      .as[(Int, Array[Long], Array[Float], Array[Double], Array[Long])]
-      .rdd.map { case (c, ids, vecs, n2, pay) =>
-        PackedBlock(c, ids, vecs, n2, pay)
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-    blocks.count()
-    PackedIndex(rows.map(_.getSeq[Float](1).toArray),
-      rows(0).getString(2), rows(0).getInt(3), blocks)
   }
 
   /** Mirror of the [[graft.functions.DistanceKernels]] float kernels over
@@ -705,7 +539,6 @@ object Ivf {
     val kk = k
     val rndScale = roundTo.getOrElse(-1)
     val dims = px.dims
-    val tomb = px.tombstones
     val pred: Long => Boolean = payloadPred.orNull
     val useSimd = simd
     // the per-partition scan: one pass over this partition's blocks into
@@ -733,8 +566,6 @@ object Ivf {
       val needsNorm = metric == "cosine"
       val bufs = new java.util.HashMap[Int, TopBuf]()
       var scratch = Array.emptyFloatArray
-      // tombstone check only when deletions exist (null = branch-free)
-      val tombSet = if (tomb.isEmpty) null else tomb
       it.foreach { b =>
         val probers = bc.value.getOrElse(b.cell, null)
         if (probers != null) {
@@ -756,8 +587,7 @@ object Ivf {
           val vecs = b.vecs; val ids = b.ids; val norms2 = b.norms2
           var i = 0
           while (i < n) {
-            if ((pred == null || pred(b.payload(i))) &&
-                (tombSet == null || !tombSet.contains(ids(i)))) {
+            if (pred == null || pred(b.payload(i))) {
               val off = i * dims
               val vn2 = if (needsNorm) norms2(i) else 0.0
               val id = ids(i)

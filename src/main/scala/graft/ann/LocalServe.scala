@@ -14,9 +14,10 @@ import org.apache.spark.sql.functions._
   *     `maxRows` — this mode exists for collections that fit on the
   *     driver (the serving-cache tier every vector DB keeps hot). Larger
   *     collections use the distributed paths ([[Ivf.batchSearchPacked]]).
-  *   - It is a snapshot: mutations after [[fromIndex]] are not visible
-  *     until re-built. The reference's in-memory index has the same
-  *     rebuild-on-mutation character (its inserts rebuild HNSW segments).
+  *   - Writes keep it live without a rebuild: [[addBatch]] appends rows
+  *     to their nearest cell and [[remove]] tombstones ids, each
+  *     returning a new copy-on-write snapshot. Centroids do not move, so
+  *     heavy drift calls for a rebuild.
   *
   * Results are bit-identical to [[Ivf.search]] at the same (k, nprobe):
   * the same cells ([[build]] and [[addBatch]] assign them as
@@ -34,13 +35,11 @@ object LocalServe {
     */
   val DefaultMaxRows: Long = 2000000L
 
-  /** Per-cell flat arrays, driver-resident. `cellPayload` holds one long
-    * attribute per row when built with `payloadCol` (for filtered point
-    * queries), empty otherwise. `tombstones` marks logically-deleted ids
-    * ([[remove]]); the structure is copy-on-write — [[addBatch]] /
-    * [[remove]] return a NEW index sharing every untouched cell array,
-    * so an in-flight [[search]] on the old snapshot never races a
-    * mutation.
+  /** Per-cell flat arrays, driver-resident. `tombstones` marks
+    * logically-deleted ids ([[remove]]); the structure is copy-on-write —
+    * [[addBatch]] / [[remove]] return a NEW index sharing every untouched
+    * cell array, so an in-flight [[search]] on the old snapshot never
+    * races a mutation.
     */
   final class LocalIndex(
       val centroids: Array[Array[Float]],
@@ -49,7 +48,6 @@ object LocalServe {
       val cellIds: Array[Array[Long]],      // cell -> ids
       val cellVecs: Array[Array[Float]],    // cell -> row-major flat vectors
       val cellNorms2: Array[Array[Double]], // cell -> per-row ||v||² (cosine)
-      val cellPayload: Array[Array[Long]],  // cell -> per-row filter attr
       val tombstones: java.util.HashSet[java.lang.Long] =
         new java.util.HashSet[java.lang.Long]()) {
     /** Live row count (inserted minus tombstoned). */
@@ -58,27 +56,23 @@ object LocalServe {
   }
 
   /** Materialize a driver-local snapshot of an IVF index: one parallel
-    * collect of (id, cell, vector[, payload]), each row in the cell Spark
-    * assigned it. Refuses collections beyond `maxRows` (the driver-memory
+    * collect of (id, cell, vector), each row in the cell Spark assigned
+    * it. Refuses collections beyond `maxRows` (the driver-memory
     * guard — this is the small-collection serving tier, not a general
     * path).
     */
   def fromIndex(ix: Ivf.Index, idCol: String = "id",
                 vecCol: String = "vector",
-                maxRows: Long = DefaultMaxRows,
-                payloadCol: Option[String] = None): LocalIndex = {
+                maxRows: Long = DefaultMaxRows): LocalIndex = {
     val n = ix.assigned.count()
     require(n <= maxRows,
       s"LocalServe.fromIndex: $n rows exceeds maxRows=$maxRows — " +
         "driver-local serving is for collections that fit on the driver; " +
         "use Ivf.batchSearchPacked for larger ones")
-    val rows = ix.assigned.select(
-      Seq(col(idCol).cast("long"), col("cell").cast("int"),
-        col(vecCol).cast("array<float>")) ++
-        payloadCol.map(c => col(c).cast("long")): _*).collect()
+    val rows = ix.assigned.select(col(idCol).cast("long"),
+      col("cell").cast("int"), col(vecCol).cast("array<float>")).collect()
     assemble(ix.centroids, ix.metric, rows.map(_.getLong(0)),
-      rows.map(vectorAt(_, 2)), rows.map(_.getInt(1)),
-      if (payloadCol.isDefined) rows.map(_.getLong(3)) else null)
+      rows.map(vectorAt(_, 2)), rows.map(_.getInt(1)))
   }
 
   /** A row's vector column as a primitive array; null is refused. */
@@ -90,11 +84,12 @@ object LocalServe {
   /** Fit `numCells` centroids on the driver ([[Ivf.localKMeans]], with
     * [[Ivf.build]]'s training defaults) and assemble the snapshot of rows
     * already there, each row in the cell of its nearest centroid as
-    * [[Ivf.cellOf]] would assign it. At most [[Ivf.MaxTrainRows]] rows
-    * train: all of them in input order when they fit (the set and order
-    * [[Ivf.boundedSample]] yields for the same scan), otherwise a seeded
-    * sample drawn over the rows in id order, so it does not depend on how
-    * the input was partitioned.
+    * [[Ivf.cellOf]] would assign it. Training, like each cell's row
+    * order, follows the input order: all rows when they fit in
+    * [[Ivf.MaxTrainRows]], otherwise a seeded sample of them kept in
+    * that order. A caller that passes rows in a canonical order (RestApi
+    * passes them by surrogate id) gets a snapshot that depends on the
+    * rows alone, not on how they were partitioned or read.
     */
   def build(ids: Array[Long], vecs: Array[Array[Float]], numCells: Int,
             metric: String): LocalIndex = {
@@ -103,10 +98,9 @@ object LocalServe {
     val train =
       if (vecs.length <= Ivf.MaxTrainRows) vecs
       else {
-        val byId = Array.range(0, ids.length).sortBy(ids(_))
         // partial Fisher-Yates: the first MaxTrainRows slots end up a
-        // uniform sample of the id-ordered positions
-        val pos = Array.range(0, ids.length)
+        // uniform sample of the input positions
+        val pos = Array.range(0, vecs.length)
         val rnd = new scala.util.Random(Ivf.TrainSeed)
         var i = 0
         while (i < Ivf.MaxTrainRows) {
@@ -114,7 +108,7 @@ object LocalServe {
           val t = pos(i); pos(i) = pos(j); pos(j) = t
           i += 1
         }
-        pos.take(Ivf.MaxTrainRows).sorted.map(p => vecs(byId(p)))
+        pos.take(Ivf.MaxTrainRows).sorted.map(vecs)
       }
     val centroids =
       Ivf.localKMeans(train, numCells, Ivf.TrainIters, Ivf.TrainSeed)
@@ -124,7 +118,7 @@ object LocalServe {
     java.util.stream.IntStream.range(0, vecs.length).parallel().forEach { r =>
       cells(r) = nearest(vecs(r), if (cosine) Ivf.norm2(vecs(r)) else 0.0)
     }
-    assemble(centroids, metric, ids, vecs, cells, null)
+    assemble(centroids, metric, ids, vecs, cells)
   }
 
   /** The cell of a vector's nearest centroid, given the vector and its
@@ -150,12 +144,11 @@ object LocalServe {
   }
 
   /** Pack rows into per-cell flat arrays, `cells(r)` naming row r's cell;
-    * each cell keeps its rows in input order. `payload` is null for an
-    * index without a filter attribute.
+    * each cell keeps its rows in input order.
     */
   private def assemble(centroids: Array[Array[Float]], metric: String,
                        ids: Array[Long], vecs: Array[Array[Float]],
-                       cells: Array[Int], payload: Array[Long]): LocalIndex = {
+                       cells: Array[Int]): LocalIndex = {
     val dims = centroids.headOption.map(_.length).getOrElse(0)
     val numCells = centroids.length
     val n = ids.length
@@ -168,8 +161,6 @@ object LocalServe {
     val cellVecs = Array.tabulate(numCells)(c => new Array[Float](counts(c) * dims))
     val cellNorms2 = Array.tabulate(numCells)(c =>
       if (cosine) new Array[Double](counts(c)) else Array.emptyDoubleArray)
-    val cellPayload = Array.tabulate(numCells)(c =>
-      if (payload != null) new Array[Long](counts(c)) else Array.emptyLongArray)
     val fill = new Array[Int](numCells)
     var r = 0
     while (r < n) {
@@ -178,11 +169,9 @@ object LocalServe {
       cellIds(c)(i) = ids(r)
       System.arraycopy(vecs(r), 0, cellVecs(c), i * dims, dims)
       if (cosine) cellNorms2(c)(i) = Ivf.norm2(vecs(r))
-      if (payload != null) cellPayload(c)(i) = payload(r)
       r += 1
     }
-    new LocalIndex(centroids, metric, dims, cellIds, cellVecs, cellNorms2,
-      cellPayload)
+    new LocalIndex(centroids, metric, dims, cellIds, cellVecs, cellNorms2)
   }
 
   /** Incremental insert — the serve-under-writes path (the reference's
@@ -203,7 +192,7 @@ object LocalServe {
     * tells the caller when.
     */
   def addBatch(li: LocalIndex,
-               rows: Seq[(Long, Array[Float], Long)]): LocalIndex = {
+               rows: Seq[(Long, Array[Float])]): LocalIndex = {
     require(rows.forall(_._2.length == li.dims),
       s"addBatch: vector dims must equal index dims ${li.dims}")
     // clearing a tombstone would resurrect the OLD physical copy along
@@ -213,18 +202,13 @@ object LocalServe {
     require(rows.forall(r => !li.tombstones.contains(Long.box(r._1))),
       "addBatch: id is tombstoned — rebuild the snapshot, or append " +
         "under a fresh surrogate id (the replace model RestApi uses)")
-    // payload tracking continues only when the built index carries it
-    // (an EMPTY payload-built index is indistinguishable from a
-    // non-payload one — build the payload snapshot from non-empty data)
-    val hasPayload = li.cellPayload.exists(_.nonEmpty)
     val nearest = nearestCell(li.centroids, li.metric)
-    val byCell = rows.groupBy { case (_, v, _) =>
+    val byCell = rows.groupBy { case (_, v) =>
       nearest(v, if (li.metric == "cosine") Ivf.norm2(v) else 0.0)
     }
     val ids = li.cellIds.clone()
     val vecs = li.cellVecs.clone()
     val norms2 = li.cellNorms2.clone()
-    val payload = li.cellPayload.clone()
     byCell.foreach { case (c, add) =>
       val n0 = ids(c).length
       val n1 = n0 + add.size
@@ -232,18 +216,15 @@ object LocalServe {
       vecs(c) = java.util.Arrays.copyOf(vecs(c), n1 * li.dims)
       if (li.metric == "cosine")
         norms2(c) = java.util.Arrays.copyOf(norms2(c), n1)
-      if (hasPayload)
-        payload(c) = java.util.Arrays.copyOf(payload(c), n1)
-      add.zipWithIndex.foreach { case ((id, v, pay), k) =>
+      add.zipWithIndex.foreach { case ((id, v), k) =>
         val i = n0 + k
         ids(c)(i) = id
         System.arraycopy(v, 0, vecs(c), i * li.dims, li.dims)
         if (li.metric == "cosine") norms2(c)(i) = Ivf.norm2(v)
-        if (hasPayload) payload(c)(i) = pay
       }
     }
     new LocalIndex(li.centroids, li.metric, li.dims, ids, vecs, norms2,
-      payload, li.tombstones)
+      li.tombstones)
   }
 
   /** Logical delete: tombstone ids (cheap, no array surgery); searches
@@ -253,7 +234,7 @@ object LocalServe {
     val tomb = new java.util.HashSet[java.lang.Long](li.tombstones)
     ids.foreach(id => tomb.add(Long.box(id)))
     new LocalIndex(li.centroids, li.metric, li.dims, li.cellIds,
-      li.cellVecs, li.cellNorms2, li.cellPayload, tomb)
+      li.cellVecs, li.cellNorms2, tomb)
   }
 
   /** In-process ANN top-k: probe nprobe cells, exact top-k within —
@@ -267,14 +248,11 @@ object LocalServe {
     * insertion-order-insensitive).
     */
   def search(li: LocalIndex, query: Array[Float], k: Int,
-             nprobe: Int,
-             payloadPred: Option[Long => Boolean] = None,
-             simd: Boolean = false): Array[(Long, Double)] = {
+             nprobe: Int, simd: Boolean = false): Array[(Long, Double)] = {
     val cells = Ivf.probeCells(li.centroids, li.metric, query, nprobe)
     val score = Ivf.pickFlatKernel(li.metric, simd)
     val needsNorm = li.metric == "cosine"
     val qn2 = if (needsNorm) Ivf.norm2(query) else 0.0
-    val pred: Long => Boolean = payloadPred.orNull
     val chunk = 4096
     val tasks = cells.flatMap { c =>
       val n = li.cellIds(c).length
@@ -290,14 +268,10 @@ object LocalServe {
       val ids = li.cellIds(c)
       val vecs = li.cellVecs(c)
       val norms2 = li.cellNorms2(c)
-      val payload = li.cellPayload(c)
-      if (pred != null) require(payload.length == ids.length,
-        "payloadPred requires an index built with payloadCol")
       val buf = new Ivf.TopBuf(k)
       var i = from
       while (i < until) {
-        if ((pred == null || pred(payload(i))) &&
-            (tomb == null || !tomb.contains(ids(i)))) {
+        if (tomb == null || !tomb.contains(ids(i))) {
           val vn2 = if (needsNorm) norms2(i) else 0.0
           buf.insert(score(vecs, i * li.dims, li.dims, query, vn2, qn2), ids(i))
         }

@@ -5,6 +5,8 @@ import scala.collection.mutable
 import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 
+import RestApi.pathSegment
+
 /** GraphQL front-end (reference: src/search/graphql_api.rs) — the last
   * host surface of the reference's switching table: queries
   * `collections / collection / vector / search / health`, mutations
@@ -225,10 +227,6 @@ final class GraphqlApi(api: RestApi, version: String = "0.1.0") {
     mapper.readTree(resp)
   }
 
-  private def esc(segment: String): String =
-    java.net.URLEncoder.encode(segment,
-      java.nio.charset.StandardCharsets.UTF_8).replace("+", "%20")
-
   private def collNode(name: String, dims: Int, count: Long): ObjectNode = {
     val o = mapper.createObjectNode()
     o.put("name", name).put("dimensions", dims)
@@ -274,13 +272,13 @@ final class GraphqlApi(api: RestApi, version: String = "0.1.0") {
     */
   private def qCollection(name: String): JsonNode =
     try {
-      val c = rest("GET", s"/collections/${esc(name)}")
+      val c = rest("GET", s"/collections/${pathSegment(name)}")
       collNode(name, c.get("dimensions").asInt(), c.get("count").asLong())
     } catch { case _: GqlError => mapper.nullNode() }
 
   private def qVector(collection: String, id: String): ObjectNode = {
     val v = rest("GET",
-      s"/collections/${esc(collection)}/vectors/${esc(id)}")
+      s"/collections/${pathSegment(collection)}/vectors/${pathSegment(id)}")
     val o = mapper.createObjectNode()
     o.put("id", id)
     o.set[JsonNode]("vector", v.get("vector"))
@@ -310,7 +308,7 @@ final class GraphqlApi(api: RestApi, version: String = "0.1.0") {
       ()
     }
     val t0 = System.nanoTime()
-    val resp = rest("POST", s"/collections/${esc(collection)}/search",
+    val resp = rest("POST", s"/collections/${pathSegment(collection)}/search",
       mapper.writeValueAsString(body))
     val queryTimeUs = (System.nanoTime() - t0) / 1000L
     import scala.jdk.CollectionConverters._
@@ -362,7 +360,7 @@ final class GraphqlApi(api: RestApi, version: String = "0.1.0") {
     val collection = reqField(input, "collection").asText()
     val id = reqField(input, "id").asText()
     val body = insertBody(input)
-    rest("POST", s"/collections/${esc(collection)}/vectors",
+    rest("POST", s"/collections/${pathSegment(collection)}/vectors",
       mapper.writeValueAsString(body))
     val o = mapper.createObjectNode()
     o.put("id", id)
@@ -391,12 +389,13 @@ final class GraphqlApi(api: RestApi, version: String = "0.1.0") {
   }
 
   private def mDeleteVector(collection: String, id: String): JsonNode = {
-    rest("DELETE", s"/collections/${esc(collection)}/vectors/${esc(id)}")
+    rest("DELETE",
+      s"/collections/${pathSegment(collection)}/vectors/${pathSegment(id)}")
     mapper.getNodeFactory.booleanNode(true)
   }
 
   private def mDeleteCollection(name: String): JsonNode = {
-    rest("DELETE", s"/collections/${esc(name)}")
+    rest("DELETE", s"/collections/${pathSegment(name)}")
     mapper.getNodeFactory.booleanNode(true)
   }
 
@@ -405,7 +404,7 @@ final class GraphqlApi(api: RestApi, version: String = "0.1.0") {
     val body = mapper.createObjectNode()
     val arr = body.putArray("vectors")
     inputs.elements().asScala.foreach(i => arr.add(insertBody(i)))
-    rest("POST", s"/collections/${esc(collection)}/vectors/batch",
+    rest("POST", s"/collections/${pathSegment(collection)}/vectors/batch",
       mapper.writeValueAsString(body))
     mapper.getNodeFactory.numberNode(arr.size())
   }

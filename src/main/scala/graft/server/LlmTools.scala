@@ -3,6 +3,8 @@ package graft.server
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 
+import RestApi.pathSegment
+
 /** LLM function-calling tool surface (reference:
   * src/services/ai/llm_tools.rs): the six engine tools as OpenAI-format
   * function schemas, call validation, and execution.
@@ -82,13 +84,6 @@ final class LlmTools(api: RestApi, embedDims: Int = 64) {
         }
     }
 
-  /** Percent-escape a path segment (an LLM-supplied id may contain '/',
-    * '?', '&' — the route splitter must see one segment).
-    */
-  private def esc(segment: String): String =
-    java.net.URLEncoder.encode(segment,
-      java.nio.charset.StandardCharsets.UTF_8).replace("+", "%20")
-
   private def embed(text: String): ArrayNode = {
     val v = graft.multimodal.Multimodal.mockEmbed(
       text.getBytes(java.nio.charset.StandardCharsets.UTF_8), embedDims)
@@ -117,24 +112,24 @@ final class LlmTools(api: RestApi, embedDims: Int = 64) {
           .getOrElse(mapper.createObjectNode())
         meta.put("_text", args.get("text").asText())
         o.set[JsonNode]("metadata", meta)
-        api.handle("POST", s"/collections/${esc(c)}/vectors",
+        api.handle("POST", s"/collections/${pathSegment(c)}/vectors",
           mapper.writeValueAsString(o))
       case "needle_search" =>
         val c = args.get("collection").asText()
         val o = mapper.createObjectNode()
         o.set[JsonNode]("vector", embed(args.get("query").asText()))
         o.put("k", Option(args.get("k")).map(_.asInt()).getOrElse(5))
-        api.handle("POST", s"/collections/${esc(c)}/search",
+        api.handle("POST", s"/collections/${pathSegment(c)}/search",
           mapper.writeValueAsString(o))
       case "needle_delete" =>
         api.handle("DELETE",
-          s"/collections/${esc(args.get("collection").asText())}/vectors/" +
-            esc(args.get("id").asText()), "")
+          s"/collections/${pathSegment(args.get("collection").asText())}" +
+            s"/vectors/${pathSegment(args.get("id").asText())}", "")
       case "needle_list_collections" =>
         api.handle("GET", "/collections", "")
       case "needle_collection_info" =>
         api.handle("GET",
-          s"/collections/${esc(args.get("collection").asText())}", "")
+          s"/collections/${pathSegment(args.get("collection").asText())}", "")
       case other =>
         throw new IllegalStateException(s"no dispatch for $other")
     }

@@ -5,6 +5,8 @@ import java.nio.charset.StandardCharsets
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 
+import RestApi.pathSegment
+
 /** Model Context Protocol server (reference: src/mcp.rs:1-1793,
   * mcp-registry.json) — exposes the engine to agent frameworks as MCP
   * tools over JSON-RPC 2.0, with the reference's registered tool names
@@ -155,9 +157,6 @@ class McpServer(api: RestApi, readOnly: Boolean = false) {
     Option(args.get(field)).filterNot(_.isNull).map(_.asText())
       .getOrElse(throw ToolError(s"Missing '$field' parameter"))
 
-  private def enc(s: String): String =
-    java.net.URLEncoder.encode(s, StandardCharsets.UTF_8)
-
   private def listCollections(): JsonNode = {
     val page = rest("GET", "/collections?limit=1000")
     val out = mapper.createObjectNode()
@@ -188,7 +187,7 @@ class McpServer(api: RestApi, readOnly: Boolean = false) {
 
   private def collectionInfo(args: JsonNode): JsonNode = {
     val name = str(args, "name")
-    val info = rest("GET", s"/collections/${enc(name)}")
+    val info = rest("GET", s"/collections/${pathSegment(name)}")
     val dims = info.get("dimensions").asInt()
     val n = info.get("count").asLong()
     val out = mapper.createObjectNode()
@@ -217,7 +216,7 @@ class McpServer(api: RestApi, readOnly: Boolean = false) {
       Option(v.get("metadata")).filterNot(_.isNull)
         .foreach(row.set[ObjectNode]("metadata", _))
     }
-    rest("POST", s"/collections/${enc(collection)}/vectors/batch",
+    rest("POST", s"/collections/${pathSegment(collection)}/vectors/batch",
       mapper.writeValueAsString(body))
     val res = mapper.createObjectNode()
     res.put("inserted", vectors.size()).put("collection", collection)
@@ -233,7 +232,7 @@ class McpServer(api: RestApi, readOnly: Boolean = false) {
       .map(_.asInt()).getOrElse(10))
     Option(args.get("filter")).filterNot(_.isNull)
       .foreach(body.set[ObjectNode]("filter", _))
-    val resp = rest("POST", s"/collections/${enc(collection)}/search",
+    val resp = rest("POST", s"/collections/${pathSegment(collection)}/search",
       mapper.writeValueAsString(body))
     val out = mapper.createObjectNode()
     val results = out.putArray("results")
@@ -251,7 +250,7 @@ class McpServer(api: RestApi, readOnly: Boolean = false) {
     val collection = str(args, "collection")
     val id = str(args, "id")
     val (status, node) = restStatus("GET",
-      s"/collections/${enc(collection)}/vectors/${enc(id)}")
+      s"/collections/${pathSegment(collection)}/vectors/${pathSegment(id)}")
     val out = mapper.createObjectNode()
     if (status == 404 && Option(node.get("error"))
         .exists(_.asText().startsWith("Vector not found"))) {
@@ -273,7 +272,7 @@ class McpServer(api: RestApi, readOnly: Boolean = false) {
     val collection = str(args, "collection")
     val id = str(args, "id")
     val (status, node) = restStatus("DELETE",
-      s"/collections/${enc(collection)}/vectors/${enc(id)}")
+      s"/collections/${pathSegment(collection)}/vectors/${pathSegment(id)}")
     if (status >= 400 && !Option(node.get("error"))
         .exists(_.asText().startsWith("Vector not found")))
       throw ToolError(Option(node.get("error")).map(_.asText())
@@ -286,7 +285,7 @@ class McpServer(api: RestApi, readOnly: Boolean = false) {
   private def deleteCollection(args: JsonNode): JsonNode = {
     guardWrite()
     val name = str(args, "name")
-    rest("DELETE", s"/collections/${enc(name)}")
+    rest("DELETE", s"/collections/${pathSegment(name)}")
     val out = mapper.createObjectNode()
     out.put("name", name).put("deleted", true)
     out
@@ -298,7 +297,7 @@ class McpServer(api: RestApi, readOnly: Boolean = false) {
     val newName = str(args, "new_name")
     val body = mapper.createObjectNode()
     body.put("new_name", newName)
-    rest("POST", s"/collections/${enc(oldName)}/rename",
+    rest("POST", s"/collections/${pathSegment(oldName)}/rename",
       mapper.writeValueAsString(body))
     val out = mapper.createObjectNode()
     out.put("old_name", oldName).put("new_name", newName)
@@ -324,7 +323,7 @@ class McpServer(api: RestApi, readOnly: Boolean = false) {
     val body = mapper.createObjectNode()
     body.set[ObjectNode]("ids", ids)
     val resp = rest("POST",
-      s"/collections/${enc(collection)}/vectors/delete-batch",
+      s"/collections/${pathSegment(collection)}/vectors/delete-batch",
       mapper.writeValueAsString(body))
     val out = mapper.createObjectNode()
     out.put("deleted_count", resp.get("deleted").asLong())
@@ -339,7 +338,7 @@ class McpServer(api: RestApi, readOnly: Boolean = false) {
     val newMeta = Option(args.get("metadata"))
       .getOrElse(throw ToolError("Missing 'metadata' parameter"))
     val existing = rest("GET",
-      s"/collections/${enc(collection)}/vectors/${enc(id)}")
+      s"/collections/${pathSegment(collection)}/vectors/${pathSegment(id)}")
     // shallow merge: new top-level keys override (mcp.rs:902-913)
     val merged = Option(existing.get("metadata")).filterNot(_.isNull) match {
       case Some(base: ObjectNode) if newMeta.isObject =>
@@ -354,7 +353,7 @@ class McpServer(api: RestApi, readOnly: Boolean = false) {
     row.set[ObjectNode]("metadata", merged)
     // the upsert route takes ONE bare vector object (RestApi.scala:117);
     // batches go to /vectors/upsert-batch
-    rest("POST", s"/collections/${enc(collection)}/vectors/upsert",
+    rest("POST", s"/collections/${pathSegment(collection)}/vectors/upsert",
       mapper.writeValueAsString(row))
     val out = mapper.createObjectNode()
     out.put("id", id).put("updated", true)
@@ -389,7 +388,7 @@ class McpServer(api: RestApi, readOnly: Boolean = false) {
     row.set[ObjectNode]("metadata", meta)
     val body = mapper.createObjectNode()
     body.putArray("vectors").add(row)
-    rest("POST", s"/collections/${enc(collection)}/vectors/batch",
+    rest("POST", s"/collections/${pathSegment(collection)}/vectors/batch",
       mapper.writeValueAsString(body))
     val out = mapper.createObjectNode()
     out.put("stored", true).put("memory_id", memoryId)
@@ -419,7 +418,7 @@ class McpServer(api: RestApi, readOnly: Boolean = false) {
       body.set[ObjectNode]("filter", conditions.get(0))
     else if (conditions.size() > 1)
       body.putObject("filter").set[ObjectNode]("$and", conditions)
-    val resp = rest("POST", s"/collections/${enc(collection)}/search",
+    val resp = rest("POST", s"/collections/${pathSegment(collection)}/search",
       mapper.writeValueAsString(body))
     val out = mapper.createObjectNode()
     val memories = out.putArray("memories")
@@ -446,7 +445,8 @@ class McpServer(api: RestApi, readOnly: Boolean = false) {
     val collection = str(args, "collection")
     val memoryId = str(args, "memory_id")
     val (status, node) = restStatus("DELETE",
-      s"/collections/${enc(collection)}/vectors/${enc(memoryId)}")
+      s"/collections/${pathSegment(collection)}/vectors/" +
+        pathSegment(memoryId))
     if (status >= 400 && !Option(node.get("error"))
         .exists(_.asText().startsWith("Vector not found")))
       throw ToolError(Option(node.get("error")).map(_.asText())
@@ -488,7 +488,8 @@ class McpServer(api: RestApi, readOnly: Boolean = false) {
         body.set[ObjectNode]("filter", mapper.readTree(filterJson))
         body.put("limit", 1000)
         after.foreach(body.put("after_id", _))
-        val page = rest("POST", s"/collections/${enc(collection)}/query",
+        val page = rest("POST",
+          s"/collections/${pathSegment(collection)}/query",
           mapper.writeValueAsString(body))
         page.get("data").forEach(r => ids += r.get("id").asText())
         val p = page.get("pagination")
@@ -497,7 +498,7 @@ class McpServer(api: RestApi, readOnly: Boolean = false) {
       }
       ids.result()
     }
-    val scanned = rest("POST", s"/collections/${enc(collection)}/count",
+    val scanned = rest("POST", s"/collections/${pathSegment(collection)}/count",
       s"""{"filter": ${episodicAnd()}}""").get("count").asLong()
     var promoted = 0L
     val toPromote = pagedIds(
@@ -518,7 +519,7 @@ class McpServer(api: RestApi, readOnly: Boolean = false) {
       val ids = body.putArray("ids")
       toForget.foreach(ids.add)
       forgotten = rest("POST",
-        s"/collections/${enc(collection)}/vectors/delete-batch",
+        s"/collections/${pathSegment(collection)}/vectors/delete-batch",
         mapper.writeValueAsString(body)).get("deleted").asLong()
     }
     val out = mapper.createObjectNode()

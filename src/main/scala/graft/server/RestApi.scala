@@ -201,7 +201,7 @@ class RestApi(spark: SparkSession) {
         val sid = next; next += 1
         newIds(sid) = id
         map.put(id, Int.box(sid))
-        (sid.toLong, v, 0L)
+        (sid.toLong, v)
       }
       copy(li = graft.ann.LocalServe.addBatch(li1, adds), ids = newIds,
         rows = rows + rows0.size - replaced.size, idToSid = map)
@@ -540,11 +540,12 @@ class RestApi(spark: SparkSession) {
     * live rows with one Spark job: a bounded collect of (id, vector, ttl)
     * from the pinned frame, everything else on the driver. Surrogate ids
     * (string ids must become longs for the packed arrays) follow the id
-    * order under `UTF8String` comparison, stable over scan order;
-    * `LocalServe.build` fits the IVF centroids on the live rows and
-    * assigns each row its cell. After this, `{"mode":"ann"}` searches
-    * answer in-process with zero Spark jobs — the reference's in-memory
-    * serving model.
+    * order under `UTF8String` comparison, stable over scan order, and
+    * `LocalServe.build` takes the rows in that order: it fits the IVF
+    * centroids and lays out each cell from the live rows alone, not from
+    * the order the collect read them in. After this, `{"mode":"ann"}`
+    * searches answer in-process with zero Spark jobs — the reference's
+    * in-memory serving model.
     *
     * `maxRows` exists as a parameter (route calls always pass the 2M
     * default) solely so the refusal branch is executable in-suite —
@@ -585,13 +586,10 @@ class RestApi(spark: SparkSession) {
       val (a, b) = (keys(x), keys(y))
       if (a == null) b != null else b != null && a.compareTo(b) < 0
     }
-    val sids = new Array[Long](n)
-    val ids = new Array[String](n)
-    bySid.indices.foreach { sid =>
-      sids(bySid(sid)) = sid; ids(sid) = rows(bySid(sid)).getString(0)
-    }
-    val li = graft.ann.LocalServe.build(sids,
-      rows.map(graft.ann.LocalServe.vectorAt(_, 1)), numCells, c.metric)
+    val ids = bySid.map(rows(_).getString(0))
+    val li = graft.ann.LocalServe.build(Array.tabulate(n)(_.toLong),
+      bySid.map(r => graft.ann.LocalServe.vectorAt(rows(r), 1)), numCells,
+      c.metric)
     synchronized {
       val map = new java.util.HashMap[String, Integer](n * 2)
       ids.zipWithIndex.foreach { case (id, sid) => map.put(id, Int.box(sid)) }
@@ -941,9 +939,6 @@ class RestApi(spark: SparkSession) {
     out.result()
   }
 
-  private def urlDecode(s: String): String =
-    java.net.URLDecoder.decode(s, java.nio.charset.StandardCharsets.UTF_8)
-
   private def splitQuery(raw: String): (String, Map[String, String]) =
     raw.split("\\?", 2) match {
       case Array(p) => (p, Map.empty)
@@ -968,4 +963,19 @@ object RestApi {
 
   final case class ApiException(status: Int, message: String, code: String)
     extends RuntimeException(message)
+
+  /** [[RestApi.handle]] splits a path on '/' and '?' and then decodes
+    * each segment and query value with this.
+    */
+  private def urlDecode(s: String): String =
+    java.net.URLDecoder.decode(s, java.nio.charset.StandardCharsets.UTF_8)
+
+  /** Percent-encode a path segment or query value bound for
+    * [[RestApi.handle]], the inverse of its decode: ids and collection
+    * names are arbitrary strings, and a raw '/', '?', '&', '%' or '+'
+    * would split the route or mangle the value.
+    */
+  private[server] def pathSegment(s: String): String =
+    java.net.URLEncoder.encode(s, java.nio.charset.StandardCharsets.UTF_8)
+      .replace("+", "%20")
 }

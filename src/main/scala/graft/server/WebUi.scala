@@ -8,6 +8,8 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 
 import graft.needleql.NeedleSession
 
+import RestApi.pathSegment
+
 /** Web dashboard (reference: src/web_ui/{mod,routes,state,templates}.rs):
   * server-rendered monitoring and management pages plus the JSON stats
   * routes the pages poll.
@@ -107,16 +109,6 @@ final class WebUi(api: RestApi, ql: Option[NeedleSession] = None,
   private def htmlOk(b: String) = (200, "text/html", b)
   private def jsonOk(b: String) = (200, "application/json", b)
 
-  /** Percent-escape a path segment / query value bound for the REST
-    * layer (LlmTools.esc parity): collection names and cursor ids are
-    * arbitrary strings, and RestApi percent-decodes after splitting —
-    * a raw '%' would 500 mid-pagination and '&'/'='/'+' would mangle
-    * the cursor.
-    */
-  private def esc(segment: String): String =
-    java.net.URLEncoder.encode(segment,
-      java.nio.charset.StandardCharsets.UTF_8).replace("+", "%20")
-
   /** HTML-escape user-derived text before page interpolation (the
     * reference web_ui templates route all such text through
     * html_escape; register()/CLI names are unconstrained).
@@ -144,7 +136,7 @@ final class WebUi(api: RestApi, ql: Option[NeedleSession] = None,
                                deleted: Long, needsCompaction: Boolean)
 
   private def collStats(name: String): CollStats = {
-    val n = rest("GET", s"/collections/${esc(name)}")
+    val n = rest("GET", s"/collections/${pathSegment(name)}")
     CollStats(name, n.get("count").asLong(), n.get("dimensions").asInt(),
       n.get("deleted_count").asLong(), n.get("needs_compaction").asBoolean())
   }
@@ -245,9 +237,10 @@ final class WebUi(api: RestApi, ql: Option[NeedleSession] = None,
     var done = false
     var n = 0
     while (!done && n < max) {
-      val page = rest("GET", s"/collections/${esc(name)}/vectors?limit=" +
+      val page = rest("GET",
+        s"/collections/${pathSegment(name)}/vectors?limit=" +
         math.min(1000, max - n) +
-        (if (after.nonEmpty) s"&after_id=${esc(after)}" else ""))
+        (if (after.nonEmpty) s"&after_id=${pathSegment(after)}" else ""))
       val vecs = page.get("vectors").asScala.toSeq
       vecs.foreach { v =>
         if (n < max) {
@@ -327,7 +320,7 @@ final class WebUi(api: RestApi, ql: Option[NeedleSession] = None,
     val rows = all.map { c =>
       val status =
         if (c.needsCompaction) "needs compaction" else "healthy"
-      s"""<tr><td><a href="/collections/${esc(c.name)}">${htmlEsc(c.name)}</a></td>
+      s"""<tr><td><a href="/collections/${pathSegment(c.name)}">${htmlEsc(c.name)}</a></td>
          |<td>${formatNumber(c.count)}</td><td>${c.dims}</td>
          |<td>${formatNumber(c.deleted)}</td><td>$status</td></tr>""".stripMargin
     }.mkString
@@ -341,7 +334,7 @@ final class WebUi(api: RestApi, ql: Option[NeedleSession] = None,
 
   private def collectionsPage(): String = {
     val items = collectionNames().map(n =>
-      s"""<li><a href="/collections/${esc(n)}">${htmlEsc(n)}</a></li>""")
+      s"""<li><a href="/collections/${pathSegment(n)}">${htmlEsc(n)}</a></li>""")
       .mkString
     page("Collections", s"<ul>$items</ul>")
   }

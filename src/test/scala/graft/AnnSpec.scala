@@ -136,28 +136,14 @@ class AnnSpec extends SparkSpec {
       // a row written after the build is read back at nprobe 1: k above
       // the row count returns the whole probed cell
       val writes = rows.take(60).zipWithIndex.map { case ((_, v), i) =>
-        (1000000L + i, v.reverse, 0L) }
+        (1000000L + i, v.reverse) }
       val li = LocalServe.addBatch(
         LocalServe.fromIndex(ix, "vec_id", "embedding"), writes)
-      val missed = writes.count { case (id, v, _) =>
+      val missed = writes.count { case (id, v) =>
         !LocalServe.search(li, v, 1000, 1).exists(_._1 == id) }
       assert(missed == 0, s"metric=$metric: $missed of ${writes.length} " +
         "written rows not found at nprobe 1")
     }
-  }
-
-  test("LocalServe filtered point query at full probe equals exact filtered top-k") {
-    import graft.ann.LocalServe
-    val ix = Ivf.build(emb, col("embedding"), numCells = 8)
-    val li = LocalServe.fromIndex(ix, "vec_id", "embedding",
-      payloadCol = Some("label"))
-    val got = LocalServe.search(li, query, 10, nprobe = 8,
-      payloadPred = Some((p: Long) => p < 5)).map(_._1).toSeq
-    val exact = emb.filter(col("label") < 5)
-      .withColumn("distance", Distances.cosine(col("embedding"), lit(query)))
-      .orderBy(col("distance").asc, col("vec_id").asc).limit(10)
-      .select("vec_id").as[Long].collect().toSeq
-    assert(got == exact)
   }
 
   test("LocalServe.fromIndex refuses collections beyond maxRows") {
@@ -299,85 +285,6 @@ class IvfStorageSpec extends SparkSpec {
       s"pruned scan read $prunedFiles of $allFiles files")
   }
 
-  test("writePacked/loadPacked round-trips and serves identically") {
-    val emb = sf("embeddings")
-    val queries = emb.filter(col("vec_id") < 5).orderBy("vec_id")
-      .select("vec_id", "embedding").collect()
-      .map(r => (r.getLong(0).toInt, r.getSeq[Float](1).toArray)).toSeq
-    val ix = Ivf.build(emb, col("embedding"), numCells = 8)
-    val px = Ivf.pack(ix, "vec_id", "embedding", payloadCol = Some("label"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpk").toString
-    Ivf.writePacked(px, dir)
-    val loaded = Ivf.loadPacked(spark, dir)
-    assert(loaded.metric == px.metric && loaded.dims == px.dims)
-    assert(loaded.centroids.zip(px.centroids)
-      .forall { case (a, b) => a.sameElements(b) })
-    // block CONTENT survives the round-trip regardless of partitioning
-    def blockSet(p: Ivf.PackedIndex) = p.blocks
-      .map(b => (b.cell, b.ids.toSeq, b.vecs.toSeq, b.norms2.toSeq,
-        b.payload.toSeq)).collect().toSet
-    assert(blockSet(loaded) == blockSet(px))
-    // and the loaded layout answers searches row-identically — including
-    // through the packed payload-filter path
-    def rows(p: Ivf.PackedIndex, pred: Option[Long => Boolean]) =
-      Ivf.batchSearchPacked(p, queries, k = 10, nprobe = 8, "vec_id",
-        roundTo = Some(6), payloadPred = pred)
-        .orderBy("query_id", "distance", "vec_id")
-        .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSeq
-    assert(rows(loaded, None) == rows(px, None))
-    val pred = Some((p: Long) => p < 5)
-    assert(rows(loaded, pred) == rows(px, pred))
-    loaded.unpersist(); px.unpersist()
-  }
-
-  test("packed delta segments: add, tombstone, compact, persist") {
-    val emb = sf("embeddings")
-    val query = emb.filter(col("vec_id") === 0)
-      .select("embedding").collect()(0).getSeq[Float](0).toArray
-    val ix = Ivf.build(emb, col("embedding"), numCells = 4)
-    val px = Ivf.pack(ix, "vec_id", "embedding")
-    def top(p: Ivf.PackedIndex) =
-      Ivf.batchSearchPacked(p, Seq((0, query)), 5, nprobe = 4, "vec_id",
-          roundTo = Some(6))
-        .orderBy("distance", "vec_id")
-        .collect().map(r => (r.getLong(1), r.getDouble(2))).toSeq
-    val before = top(px)
-    // delta insert: the new vector IS the query → distance 0, ties the
-    // original vec 0 and lands second by id order
-    val newId = 777777L
-    val px1 = Ivf.addToPacked(px, Seq((newId, query.clone(), 0L)))
-    val after = top(px1)
-    assert(after.take(2).map(_._1).contains(newId) && after(1)._2 == 0.0,
-      s"got $after")
-    // the base index is untouched (segments, not mutation)
-    assert(top(px) == before)
-    // tombstone removes it from results; compaction preserves results
-    val px2 = Ivf.removeFromPacked(px1, Seq(newId))
-    assert(top(px2) == before)
-    val px3 = Ivf.compactPacked(px2)
-    assert(top(px3) == before)
-    assert(px3.tombstones.isEmpty)
-    // compacting WITH the live delta keeps it, one block per cell
-    val px4 = Ivf.compactPacked(px1)
-    assert(top(px4) == after)
-    assert(px4.blocks.map(_.cell).collect().toSeq.sorted ==
-      px4.blocks.map(_.cell).distinct().collect().toSeq.sorted)
-    // durable write is a compaction point: tombstoned rows do not land
-    val dir = java.nio.file.Files.createTempDirectory("graft-delta").toString
-    Ivf.writePacked(px2, dir)
-    val lpx = Ivf.loadPacked(spark, dir)
-    assert(top(lpx) == before)
-    assert(!lpx.blocks.flatMap(_.ids).collect().contains(newId))
-    // re-using a tombstoned id is rejected (fresh-surrogate model);
-    // after compaction the id is free again
-    intercept[IllegalArgumentException] {
-      Ivf.addToPacked(px2, Seq((newId, query.clone(), 0L)))
-    }
-    val px5 = Ivf.addToPacked(px3, Seq((newId, query.clone(), 0L)))
-    assert(top(px5) == after)
-    Seq(px, px3, px4, lpx).foreach(_.unpersist())
-  }
-
   test("SIMD kernels resolve in forked JVMs and agree with scalar") {
     // build.sbt forks every JVM with --add-modules jdk.incubator.vector;
     // if this regresses, the simd serving mode silently degrades to
@@ -493,7 +400,7 @@ class IvfStorageSpec extends SparkSpec {
     // insert a vector AT the query point: it must serve first, and the
     // OLD snapshot must not see it (copy-on-write isolation)
     val newId = 999999L
-    val li1 = LocalServe.addBatch(li0, Seq((newId, query.clone(), 0L)))
+    val li1 = LocalServe.addBatch(li0, Seq((newId, query.clone())))
     assert(li1.liveCount == li0.liveCount + 1)
     // the new vector IS the query, so it ties vec_id 0 at distance 0
     // and (distance, id) order puts it second
@@ -512,15 +419,15 @@ class IvfStorageSpec extends SparkSpec {
     // tell the old physical copy from the new one — replace = fresh
     // surrogate id, the REST model)
     intercept[IllegalArgumentException] {
-      LocalServe.addBatch(li2, Seq((newId, query.clone(), 0L)))
+      LocalServe.addBatch(li2, Seq((newId, query.clone())))
     }
     // ...but a fresh surrogate serves immediately
-    val li3 = LocalServe.addBatch(li2, Seq((newId + 1, query.clone(), 0L)))
+    val li3 = LocalServe.addBatch(li2, Seq((newId + 1, query.clone())))
     assert(LocalServe.search(li3, query, 5, nprobe = 8)
       .take(2).map(_._1).contains(newId + 1))
     // dims guard
     intercept[IllegalArgumentException] {
-      LocalServe.addBatch(li0, Seq((1L, new Array[Float](dims + 1), 0L)))
+      LocalServe.addBatch(li0, Seq((1L, new Array[Float](dims + 1))))
     }
   }
 

@@ -25,8 +25,9 @@ class AntiPatternLedgerSpec extends AnyFunSuite {
 
   private val collectLedger: Map[String, Int] = Map(
     // measurement/CLI mains and the explorer TUI: driver-resident by
-    // design — they print results
-    "BaselineBench.scala" -> 21,
+    // design — they print results (BaselineBench −2: the packed-layout
+    // persistence and delta-segment sections are gone)
+    "BaselineBench.scala" -> 19,
     "Bench.scala" -> 3,
     "Cli.scala" -> 4,
     // measurement main: warm-up + timed drain of each censused query plan
@@ -43,8 +44,9 @@ class AntiPatternLedgerSpec extends AnyFunSuite {
     // +1 r20: boundedSample's single probing job — limit(maxRows+1)
     // collect, bounded by the training-row cap by construction (replaces
     // the count()-then-collect pair; the count site remains for the
-    // over-bound fallback)
-    "ann/Ivf.scala" -> 7,
+    // over-bound fallback); −1: loadPacked's centroid read went with the
+    // packed parquet layout
+    "ann/Ivf.scala" -> 6,
     "ann/LocalServe.scala" -> 1,
     "ann/Matryoshka.scala" -> 1,
     "ann/Quantization.scala" -> 4,

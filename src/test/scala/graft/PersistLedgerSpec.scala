@@ -37,9 +37,10 @@ class PersistLedgerSpec extends AnyFunSuite {
     "Cli.scala" -> 1,
     // released-in-finally (FailurePathReleaseSpec covers analyze)
     "ann/CompressionAdvisor.scala" -> 1,
-    // explicit-release API: index blocks expose unpersist(); callers /
-    // IndexCache own the lifecycle
-    "ann/Ivf.scala" -> 4,
+    // explicit-release API: pack()'s blocks expose unpersist(); callers /
+    // IndexCache own the lifecycle (the delta, compaction and loadPacked
+    // pins went with those paths)
+    "ann/Ivf.scala" -> 1,
     // released-in-finally per grid candidate (r14)
     "ann/Tuner.scala" -> 1,
     // 1 aggregate released in finally; 2 are the returned Model's

@@ -762,14 +762,13 @@ class RestApiSpec extends SparkSpec {
     assert(jobs.size == 1, s"index build jobs: $jobs")
     val ann = a.annState("c")
     assert(ann.covers && ann.rows == 500L)
-    // the Spark-side recipe over the rows in the order the build reads
-    // them (one coalesced task): surrogate ids by id order, Ivf.build,
-    // LocalServe.fromIndex
-    val scan = frame.select("id", "vector").coalesce(1).collect()
-    val ids = scan.map(_.getString(0)).sorted
-    val sid = ids.zipWithIndex.toMap
-    val ref = scan.toSeq.map(r => (sid(r.getString(0)).toLong,
-      r.getSeq[Float](1))).toDF("sid", "vector")
+    // the Spark-side recipe over the live rows in id order, the order
+    // the build hands LocalServe.build: surrogate ids by id order,
+    // Ivf.build, LocalServe.fromIndex
+    val scan = frame.select("id", "vector").collect().sortBy(_.getString(0))
+    val ids = scan.map(_.getString(0))
+    val ref = scan.toSeq.zipWithIndex.map { case (r, sid) =>
+      (sid.toLong, r.getSeq[Float](1)) }.toDF("sid", "vector")
     val ix = Ivf.build(ref, col("vector"), 6, "cosine")
     val li = LocalServe.fromIndex(ix, "sid", "vector")
     def same[T](x: Array[Array[T]], y: Array[Array[T]]) =
@@ -779,7 +778,7 @@ class RestApiSpec extends SparkSpec {
     assert(same(ann.li.cellIds, li.cellIds))
     assert(same(ann.li.cellVecs, li.cellVecs))
     assert(same(ann.li.cellNorms2, li.cellNorms2))
-    // and the cells are the ones Spark's Ivf.cellOf assigns, scan order
+    // and the cells are the ones Spark's Ivf.cellOf assigns, id order
     // kept within each cell
     val byCell = ix.assigned.select(col("cell"), col("sid")).collect()
       .groupBy(_.getInt(0)).map { case (c, rs) => c -> rs.map(_.getLong(1)) }
@@ -892,19 +891,56 @@ class RestApiSpec extends SparkSpec {
       val c = centers(i % 32)
       f"p$i%06d" -> c.map(x => x + 0.3f * rnd.nextGaussian().toFloat).toSeq
     }
-    val df = rows.toDF("id", "vector")
     val a = new RestApi(spark)
-    a.register("c2", df.repartition(2).localCheckpoint(true), dims = 8)
-    a.register("c5", df.repartition(5).localCheckpoint(true), dims = 8)
-    Seq("c2", "c5").foreach { c =>
-      val (s, out) = a.handle("POST", s"/collections/$c/index",
+    def register(name: String, rs: Seq[(String, Seq[Float])],
+                 partitions: Int): Unit =
+      a.register(name, rs.toDF("id", "vector").repartition(partitions)
+        .localCheckpoint(true), dims = 8)
+    def index(name: String): graft.ann.LocalServe.LocalIndex = {
+      val (s, out) = a.handle("POST", s"/collections/$name/index",
         """{"num_cells":16,"nprobe":4}""")
       assert(s == 200, out)
+      a.annState(name).li
     }
-    val (x, y) = (a.annState("c2").li, a.annState("c5").li)
-    assert(x.centroids.length == 16 &&
-      x.centroids.indices.forall(i => x.centroids(i).sameElements(y.centroids(i))),
-      "the training sample depends on the partition layout")
+    // the published snapshot, centroids and each cell's rows in order,
+    // is a function of the live rows alone
+    def assertSame(x: String, y: String): Unit = {
+      val (lx, ly) = (index(x), index(y))
+      def same[T](p: Array[Array[T]], q: Array[Array[T]]) =
+        p.length == q.length && p.indices.forall(i => p(i).sameElements(q(i)))
+      val sameIds = a.annState(x).ids.sameElements(a.annState(y).ids)
+      val sameCentroids = same(lx.centroids, ly.centroids)
+      val sameCells = same(lx.cellIds, ly.cellIds) &&
+        same(lx.cellVecs, ly.cellVecs)
+      assert(sameIds, s"$x/$y: surrogate ids differ")
+      assert(lx.centroids.length == 16)
+      assert(sameCentroids,
+        s"$x/$y: the training order depends on the partition layout")
+      assert(sameCells,
+        s"$x/$y: the cell layout depends on the partition layout")
+    }
+    register("c2", rows, 2)
+    register("c5", rows, 5)
+    assertSame("c2", "c5")
+    // under 100 000 rows every row trains, in id order
+    val small = rows.take(3000)
+    register("s2", small, 2)
+    register("s5", small, 5)
+    assertSame("s2", "s5")
+    // a collection that received writes (a base, then an upsert-batch and
+    // a delete-batch) against a fresh one over the same live rows
+    register("w", small.map { case (id, v) => id -> v.map(_ * 2f) } ++
+      (0 until 40).map(i => f"x$i%02d" -> small(i)._2), 3)
+    assert(a.handle("POST", "/collections/w/vectors/upsert-batch",
+      upsertBody(small.filter(_._1.last == '7')))._1 == 200)
+    assert(a.handle("POST", "/collections/w/vectors/delete-batch",
+      (0 until 40).map(i => f"\"x$i%02d\"")
+        .mkString("""{"ids":[""", ",", "]}"))._1 == 200)
+    val live = a.collectionFrame("w").select("id", "vector").collect()
+      .map(r => r.getString(0) -> r.getSeq[Float](1)).reverse.toSeq
+    assert(live.length == small.length)
+    register("wf", live, 4)
+    assertSame("w", "wf")
     val queries = (0 until 20).map(i => rows(i * 4999)._2.map(_ + 0.05f))
     val recall = queries.map { q =>
       def ids(mode: String) = {
